@@ -18,8 +18,6 @@ bit-identical doubles.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -194,8 +192,82 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# Exact order statistics: one radix-selection kernel
+# ---------------------------------------------------------------------------
+
+# Prices in integer cents fit a 24-bit domain (max l_extendedprice ≈
+# 104,998 → 10,499,800 cents < 2^24 = 16,777,216), so the 12 high bits
+# of the cents value leave ≤ 4096 values per bucket. agg_median_bisect
+# AUDITS the bound in-row (n_over_domain must be 0) so a fixture
+# regeneration that widens the domain fails loudly.
+_MEDB_BITS = 24
+
+
+def _fold(key: str, cnt: str, start: str, key_type: str) -> str:
+    """Running-sum fold over the sorted (key, count) array ``h``: stop at
+    the first entry where the cumulative count reaches ``k``. The result
+    holds that entry's ``key`` and, in ``cum``, the count of everything
+    before it. An EXPRESSION over a bounded array, not a Sort operator."""
+    return f"""aggregate(h,
+        named_struct('cum', {start}, 'done', false, 'key', CAST(NULL AS {key_type})),
+        (acc, e) -> CASE
+          WHEN acc.done THEN acc
+          WHEN acc.cum + e.{cnt} >= k THEN named_struct(
+            'cum', acc.cum, 'done', true, 'key', e.{key})
+          ELSE named_struct(
+            'cum', acc.cum + e.{cnt}, 'done', false, 'key', acc.key)
+        END)"""
+
+
+def _radix_select(counts: DataFrame, keys: list[str], ranks: DataFrame) -> DataFrame:
+    """Exact k-th smallest value per (group, rank) by two-level radix-2^12
+    selection — classic external quickselect from the DBMS literature.
+
+    ``counts`` holds ``keys`` + ``v`` (a distinct value), ``cnt`` (its
+    multiplicity) and ``b`` (its high bucket, monotone in ``v`` with
+    ≤ 4096 values per bucket); the caller localCheckpoints it, since both
+    passes read it. ``ranks`` holds ``keys`` + ``idx`` (the caller's rank
+    id) and ``k`` (1-based rank). Returns ``keys`` + ``idx``, ``k``,
+    ``val`` (the k-th smallest ``v``) and ``r`` = count(values < val).
+
+    Pass 1 folds each group's sorted bucket histogram (≤ 4096 entries at
+    any data size) to the bucket holding rank k and r0 = the count in
+    earlier buckets. Pass 2 re-aggregates only the selected buckets and
+    folds their values from r0. Both buffers are domain-bounded, never
+    data-sized; there is no Sort operator and no collect(). With no keys
+    the ranks ride a 1-row broadcast cross join."""
+    hist = (
+        counts.groupBy(*keys, "b")
+        .agg(F.sum("cnt").cast("long").alias("c"))
+        .groupBy(*keys)
+        .agg(F.sort_array(F.collect_list(F.struct("b", "c"))).alias("h"))
+    )
+    ranks = F.broadcast(ranks)
+    b_type = counts.schema["b"].dataType.simpleString()
+    v_type = counts.schema["v"].dataType.simpleString()
+    sel = (
+        (hist.join(ranks, keys) if keys else hist.crossJoin(ranks))
+        .select(*keys, "idx", "k", F.expr(_fold("b", "c", "0L", b_type)).alias("s"))
+        .select(*keys, "idx", "k", F.col("s.key").alias("b"), F.col("s.cum").alias("r0"))
+    )
+    return (
+        counts.join(F.broadcast(sel), [*keys, "b"])
+        .groupBy(*keys, "idx", "k", "r0")
+        .agg(F.sort_array(F.collect_list(F.struct("v", "cnt"))).alias("h"))
+        .select(*keys, "idx", "k", F.expr(_fold("v", "cnt", "r0", v_type)).alias("s"))
+        .select(*keys, "idx", "k", F.col("s.key").alias("val"), F.col("s.cum").alias("r"))
+    )
+
+
+# ---------------------------------------------------------------------------
 # agg_percentile — exact percentiles (delay-percentile-style metric)
 # ---------------------------------------------------------------------------
+
+_PCTL_PS = (0.5, 0.9, 0.99)
+
+# lineitem scan size (bytes) from which agg_percentile takes its bounded form.
+_PCTL_BOUNDED_BYTES = 1 << 30
+
 
 @gate_query(
     "agg_percentile",
@@ -213,91 +285,79 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact linear-interpolation percentiles (matches quantile_cont).
 
-    TWO result-identical physical forms, switched on input size (r13,
-    VERDICT r12 #1 — scale-adaptive per the conf/env rule, local
-    default keeps the driver's bench comparable):
+    Two result-identical physical forms, picked by the size Spark reports
+    for the lineitem scan against ``_PCTL_BOUNDED_BYTES`` (1 GiB):
 
-    - sorted (fixture-scale default): ONE array_sort(collect_list) per
-      group + rank interpolation — measured 2.5× faster than the
-      builtin percentile(col, array(...)) at bench SF. Its per-group
-      buffer is DATA-sized (every group row lands in one executor
-      array), which is exactly what does NOT survive 100 TB (§5).
-    - bounded (the 100 TB path; forced when the lineitem input exceeds
-      SPARK_GRAFT_PCTL_BOUNDED_BYTES, default 1 GiB, or with
-      SPARK_GRAFT_PCTL_FORM=bounded): the agg_median_bisect two-level
-      radix-2^12 selection, generalized to grouped, multi-quantile
-      BRACKETED-rank selection — per group it picks the two order
-      statistics around each pos=(n-1)*p rank via two domain-bounded
-      histogram passes (≤4096-row buffers at ANY data size), then
-      applies the identical interpolation to the picked RAW doubles.
+    - sorted (below it): ONE array_sort(collect_list) per group + rank
+      interpolation — measured 2.5× faster than the builtin
+      percentile(col, array(...)) at bench SF. Its per-group buffer is
+      DATA-sized (every group row lands in one executor array), which is
+      exactly what does NOT survive 100 TB (§5).
+    - bounded (at or above it): ``_radix_select`` picks, per group, the
+      two order statistics bracketing each pos=(n-1)*p rank from
+      domain-bounded histograms (≤4096-row buffers at ANY data size).
 
-    Both forms evaluate the same FP formula — lower*(ceil-pos) +
-    higher*(pos-floor) on the same bracketing raw-double order
-    statistics — so they are bit-identical to each other, to the
-    builtin, and to DuckDB's quantile_cont (pinned by
-    tests/test_r13_ops.py equality + forced-form oracle compares at
-    all three SFs). The bounded form's bucket key floor(v*100+0.5) is
-    only a MONOTONE proxy (2-decimal currency domain, the same
-    _MEDB_BITS=24 audit basis as agg_median_bisect); selection and
-    interpolation read the raw doubles, never the cents."""
-    form = os.environ.get("SPARK_GRAFT_PCTL_FORM", "auto")
-    if form == "auto":
-        try:
-            big = (
-                os.path.getsize(os.path.join(sf_dir, "lineitem.parquet"))
-                >= int(os.environ.get("SPARK_GRAFT_PCTL_BOUNDED_BYTES", str(1 << 30)))
-            )
-        except OSError:
-            big = False
-        form = "bounded" if big else "sorted"
-    if form == "bounded":
-        return _agg_percentile_bounded(spark, sf_dir)
+    Why both: at sf0.1 on local[4] (7 alternating pairs) the bounded form
+    was bit-identical but slower — build + first run 1.84 s vs 0.71 s
+    (median), almost all of it its eager localCheckpoint (build alone
+    1.22 s vs 0.18 s); prepared passes 0.63 s vs 0.58 s. Dropping the
+    sorted form would cost a cold run about 1.1 s.
+
+    The size is the optimized scan's plan statistic (no job launched), so
+    a partitioned directory or a remote path is sized by its files.
+
+    Both forms evaluate the same FP formula (``_pctl_interp``) on the
+    same bracketing raw-double order statistics, so they are
+    bit-identical to each other, to the builtin, and to DuckDB's
+    quantile_cont (pinned in tests/test_aggregates.py). The bounded
+    form's bucket key floor(v*100+0.5) is only a MONOTONE proxy
+    (2-decimal currency domain, the _MEDB_BITS audit basis of
+    agg_median_bisect); selection and interpolation read the raw
+    doubles, never the cents."""
     li = table(spark, sf_dir, "lineitem")
+    scan_bytes = li._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if int(scan_bytes) >= _PCTL_BOUNDED_BYTES:
+        return _pctl_bounded(li)
+    return _pctl_sorted(li)
+
+
+def _pctl_interp(n, p: float, lo, hi):
+    """quantile_cont's interpolation between the order statistics ``lo``
+    and ``hi`` bracketing pos=(n-1)*p — the one FP expression both
+    agg_percentile forms evaluate."""
+    pos = (n - 1).cast("double") * F.lit(p)
+    lower = F.floor(pos)
+    return F.when(pos == lower, lo).otherwise(
+        lo * (F.ceil(pos) - pos) + hi * (pos - lower)
+    )
+
+
+def _pctl_sorted(li: DataFrame) -> DataFrame:
+    """agg_percentile's fixture-scale form: one sorted array per group."""
     pcts = li.groupBy("l_returnflag").agg(
         F.array_sort(F.collect_list("l_extendedprice")).alias("a")
     )
 
     def interp(p: float):
-        pos = (F.size("a") - 1).cast("double") * F.lit(p)
-        lower = F.floor(pos)          # double-valued floor
-        lo_i = lower.cast("int")      # 0-based index of the lower rank
+        n = F.size("a")
+        lo_i = F.floor((n - 1).cast("double") * F.lit(p)).cast("int")  # 0-based
         lo = F.get("a", lo_i)
-        hi = F.coalesce(F.get("a", lo_i + 1), lo)
-        return F.when(pos == lower, lo).otherwise(
-            lo * (F.ceil(pos) - pos) + hi * (pos - lower)
-        )
+        return _pctl_interp(n, p, lo, F.coalesce(F.get("a", lo_i + 1), lo))
 
     return pcts.select(
         "l_returnflag",
-        interp(0.5).alias("p50_price"),
-        interp(0.9).alias("p90_price"),
-        interp(0.99).alias("p99_price"),
+        *[interp(p).alias(f"p{round(p * 100)}_price") for p in _PCTL_PS],
     )
 
 
-_PCTL_PS = (0.5, 0.9, 0.99)  # shared by both agg_percentile forms
-
-
-def _agg_percentile_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped bounded-buffer exact percentiles (agg_percentile's
-    100 TB form — see its docstring for the switch contract).
-
-    Shape: ONE shuffle builds the per-(group, value) count table
-    (domain-bounded: ≤ |groups| × 2^24 distinct cents rows at any data
-    size), localCheckpoint-ed once as the loop-invariant input of both
-    passes (the agg_median_bisect convention). Pass 1 histograms the
-    2^12 high bucket bits per group (≤4096-row collect per group) and,
-    for each of the 6 needed ranks (lo/hi bracket per quantile), folds
-    the sorted histogram to the owning bucket + the count of values in
-    earlier buckets (r0). Pass 2 re-aggregates ONLY the needed buckets
-    (≤4096 distinct values each under the 2-decimal domain), resuming
-    each fold at its r0, and emits the k-th raw DOUBLE per rank. The
-    final select re-applies the sorted form's exact interpolation
-    expression to those doubles. No Sort operator, no data-sized
-    buffer, no driver scalar — 3 aggregation passes over the compact
-    count table in one lazy plan after the checkpoint."""
-    half = _MEDB_BITS // 2
-    li = table(spark, sf_dir, "lineitem")
+def _pctl_bounded(li: DataFrame) -> DataFrame:
+    """agg_percentile's 100 TB form: ONE shuffle builds the per-(group,
+    value) count table (≤ |groups| × 2^24 distinct cents rows at any data
+    size), localCheckpoint-ed once as ``_radix_select``'s input. Per group
+    it selects the 1-based ranks k_lo = floor(pos)+1 and
+    k_hi = least(k_lo+1, n) (capped only when pos == floor(pos), where
+    the interpolation never reads hi), then interpolates the selected raw
+    doubles."""
     cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
     counts = (
         li.where(F.col("l_extendedprice").isNotNull())
@@ -307,77 +367,27 @@ def _agg_percentile_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_returnflag",
             F.col("l_extendedprice").alias("v"),
             "cnt",
-            F.shiftright(cents, half).alias("b"),
+            F.shiftright(cents, _MEDB_BITS // 2).alias("b"),
         )
-        .localCheckpoint()  # loop-invariant input of both passes
+        .localCheckpoint()  # the input of both selection passes
     )
     nk = counts.groupBy("l_returnflag").agg(F.sum("cnt").cast("long").alias("n"))
-
-    # The 6 needed 1-based ranks per group: for each p, the two order
-    # statistics bracketing pos=(n-1)*p — k_lo = floor(pos)+1 and
-    # k_hi = min(k_lo+1, n) (capped only when pos==lower, where the
-    # interpolation never reads hi). floor(CAST(n-1 AS DOUBLE) * p)
-    # reproduces the sorted form's pos arithmetic exactly.
-    ks_sql = "array({})".format(
-        ", ".join(
-            f"named_struct('idx', {2 * i + w}, 'k', CAST(floor(CAST(n - 1 AS DOUBLE) * {p!r}) AS BIGINT) + {1 + w}L)"
-            if w == 0
-            else f"named_struct('idx', {2 * i + w}, 'k', least(CAST(floor(CAST(n - 1 AS DOUBLE) * {p!r}) AS BIGINT) + 2L, n))"
-            for i, p in enumerate(_PCTL_PS)
-            for w in (0, 1)
-        )
+    n = F.col("n")
+    ranks = []
+    for i, p in enumerate(_PCTL_PS):
+        k_lo = F.floor((n - 1).cast("double") * F.lit(p)) + 1
+        ranks += [
+            F.struct(F.lit(2 * i).alias("idx"), k_lo.alias("k")),
+            F.struct(F.lit(2 * i + 1).alias("idx"), F.least(k_lo + 1, n).alias("k")),
+        ]
+    vals = _radix_select(
+        counts,
+        ["l_returnflag"],
+        nk.select("l_returnflag", F.explode(F.array(*ranks)).alias("t")).select(
+            "l_returnflag", "t.idx", "t.k"
+        ),
     )
-    # Pass-1 fold (the agg_median_bisect running-sum expression): walk
-    # the sorted (bucket, count) histogram, stop at the first bucket
-    # where the cumulative count reaches x.k; 'r' = count(values in
-    # earlier buckets).
-    pick1_sql = """transform(ks, x -> named_struct('idx', x.idx, 'k', x.k, 'sel',
-        aggregate(h,
-          named_struct('cum', 0L, 'done', false, 'key', -1L, 'r', 0L),
-          (acc, e) -> CASE
-            WHEN acc.done THEN acc
-            WHEN acc.cum + e.c >= x.k THEN named_struct(
-              'cum', acc.cum + e.c, 'done', true, 'key', e.b, 'r', acc.cum)
-            ELSE named_struct(
-              'cum', acc.cum + e.c, 'done', false, 'key', -1L, 'r', 0L)
-          END)))"""
-    hist = counts.groupBy("l_returnflag", "b").agg(F.sum("cnt").cast("long").alias("c"))
-    needed = (
-        hist.groupBy("l_returnflag")
-        .agg(F.sort_array(F.collect_list(F.struct("b", "c"))).alias("h"))
-        .join(F.broadcast(nk), "l_returnflag")
-        .select("l_returnflag", F.expr(ks_sql).alias("ks"), "h")
-        .select("l_returnflag", F.explode(F.expr(pick1_sql)).alias("t"))
-        .select(
-            F.col("l_returnflag").alias("g"),
-            F.col("t.idx").alias("idx"),
-            F.col("t.k").alias("k"),
-            F.col("t.sel.key").alias("nb"),
-            F.col("t.sel.r").alias("r0"),
-        )
-    )
-    # Pass 2: only the needed buckets survive the broadcast semi-join;
-    # each (group, rank) folds its ≤4096-distinct-value bucket from r0.
-    pick2_sql = """aggregate(h,
-        named_struct('cum', r0, 'done', false, 'key', CAST(NULL AS DOUBLE)),
-        (acc, e) -> CASE
-          WHEN acc.done THEN acc
-          WHEN acc.cum + e.cnt >= k THEN named_struct(
-            'cum', acc.cum + e.cnt, 'done', true, 'key', e.v)
-          ELSE named_struct(
-            'cum', acc.cum + e.cnt, 'done', false, 'key', CAST(NULL AS DOUBLE))
-        END)"""
-    vals = (
-        counts.join(
-            F.broadcast(needed),
-            (counts["l_returnflag"] == needed["g"]) & (counts["b"] == needed["nb"]),
-        )
-        .groupBy("g", "idx", "k", "r0")
-        .agg(F.sort_array(F.collect_list(F.struct("v", "cnt"))).alias("h"))
-        .select("g", "idx", F.expr(pick2_sql).alias("s"))
-        .select("g", "idx", F.col("s.key").alias("val"))
-    )
-    wide = vals.groupBy("g").agg(
+    wide = vals.groupBy("l_returnflag").agg(
         *[
             F.max(F.when(F.col("idx") == i, F.col("val"))).alias(f"v{i}")
             for i in range(2 * len(_PCTL_PS))
@@ -385,24 +395,12 @@ def _agg_percentile_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def interp(i: int, p: float):
-        # IDENTICAL FP expression to the sorted form, applied to the
-        # selected bracketing raw doubles.
-        pos = (F.col("n") - 1).cast("double") * F.lit(p)
-        lower = F.floor(pos)
         lo = F.col(f"v{2 * i}")
-        hi = F.coalesce(F.col(f"v{2 * i + 1}"), lo)
-        return F.when(pos == lower, lo).otherwise(
-            lo * (F.ceil(pos) - pos) + hi * (pos - lower)
-        )
+        return _pctl_interp(n, p, lo, F.coalesce(F.col(f"v{2 * i + 1}"), lo))
 
-    return (
-        wide.join(F.broadcast(nk), wide["g"] == nk["l_returnflag"])
-        .select(
-            "l_returnflag",
-            interp(0, 0.5).alias("p50_price"),
-            interp(1, 0.9).alias("p90_price"),
-            interp(2, 0.99).alias("p99_price"),
-        )
+    return wide.join(F.broadcast(nk), "l_returnflag").select(
+        "l_returnflag",
+        *[interp(i, p).alias(f"p{round(p * 100)}_price") for i, p in enumerate(_PCTL_PS)],
     )
 
 
@@ -813,12 +811,6 @@ def agg_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # agg_median_bisect — exact order statistic WITHOUT sorting or collecting
 # ---------------------------------------------------------------------------
 
-# Prices in integer cents fit a 24-bit domain (max l_extendedprice ≈
-# 104,998 → 10,499,800 cents < 2^24 = 16,777,216); the gate AUDITS the
-# bound in-row (n_over_domain must be 0) so a fixture regeneration that
-# widens the domain fails loudly instead of selecting a wrong bit.
-_MEDB_BITS = 24
-
 
 @gate_query(
     "agg_median_bisect",
@@ -851,31 +843,18 @@ def agg_median_bisect(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-statistic pattern that survives 100 TB where both
     sorted-collect (agg_percentile's DATA-sized per-group buffer) and a
     global sort do not: ONE shuffle builds the value→count table, then
-    two fixed, data-independent histogram passes each aggregate that
-    compact table once — pass 1 picks the 12-high-bit bucket holding
-    the k-th value, pass 2 the exact value inside it (classic external
-    quickselect / radix selection from the DBMS literature, radix
-    2^12). Each pass's histogram is DOMAIN-bounded (≤ 4096 rows at ANY
-    data size — the in-row n_over_domain audit guards the bound), so
-    the collect_list buffer is a bounded constant, and the winning
-    entry is chosen by a sort_array + running-sum `aggregate` fold — an
-    EXPRESSION over the bounded array, not a Sort operator and not a
-    driver collect.
+    ``_radix_select``'s two fixed, data-independent histogram passes
+    pick the 12-high-bit bucket holding the k-th value and the exact
+    value inside it. Each pass's histogram is DOMAIN-bounded (≤ 4096
+    rows at ANY data size — the in-row n_over_domain audit guards the
+    bound). Rule: radix-16 measured worse — per-round codegen grows with
+    expression width.
 
-    r12 optimization-round history, measured on this box: the original
-    24 bit-at-a-time rounds cost 24 eager 1-row-checkpoint jobs
-    (min 5.2 s matched-window @ sf0.1); a radix-16 rewrite (6 rounds ×
-    16 conditional sums + CASE-cascade selection) was MEASURED WORSE
-    (min 6.5 s — per-round planning/codegen grows with expression
-    width and eats the saved driver round trips); this two-pass
-    bounded-histogram form collapses the loop to 2 aggregations inside
-    ONE lazy plan. No driver scalar anywhere: the (bucket, r) state
-    rides 1-ROW broadcast DataFrames exactly as the loop form did.
     All-integer: shiftright on BIGINT cents is exact in both engines,
     so the oracle (a direct row_number() selection of the same k-th
     element) must agree bit-for-bit; the single median_price division
-    is one identical IEEE BIGINT/double op. Invariant carried: after
-    pass 2, hi IS the k-th smallest value and r IS count(v < hi),
+    is one identical IEEE BIGINT/double op. Invariant carried: the
+    selected value IS the k-th smallest and r IS count(v < it),
     exposed as n_below and re-derived independently by the oracle."""
     li = table(spark, sf_dir, "lineitem")
     v = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
@@ -883,74 +862,23 @@ def agg_median_bisect(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.select(v.alias("v"))
         .groupBy("v")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint()  # loop-invariant input, materialized once
+        .select("v", "cnt", F.shiftright("v", _MEDB_BITS // 2).alias("b"))
+        .localCheckpoint()  # the input of both selection passes
     )
-    nk = counts.agg(
-        F.sum("cnt").cast("long").alias("n"),
-    ).select("n", F.expr("(n + 1L) DIV 2").alias("k"))
-    half = _MEDB_BITS // 2  # 12 high bits, then 12 low bits
-    # The running-sum fold shared by both passes: walk the (key, count)
-    # histogram in key order (sort_array — an EXPRESSION over a bounded
-    # array, not a Sort operator) and stop at the first key where the
-    # cumulative count reaches k. 'r' carries count(values < key), the
-    # same invariant the bit-at-a-time loop maintained.
-    def _fold(key_field: str, cnt_field: str, start: str) -> str:
-        return f"""aggregate(
-            h,
-            named_struct('cum', {start}, 'done', false, 'key', -1L, 'r', 0L),
-            (acc, x) -> CASE
-              WHEN acc.done THEN acc
-              WHEN acc.cum + x.{cnt_field} >= k THEN named_struct(
-                'cum', acc.cum + x.{cnt_field}, 'done', true,
-                'key', x.{key_field}, 'r', acc.cum)
-              ELSE named_struct(
-                'cum', acc.cum + x.{cnt_field}, 'done', false,
-                'key', -1L, 'r', 0L)
-            END)"""
-
-    # Pass 1: which 2^half-bucket holds the k-th value. The histogram is
-    # DOMAIN-bounded (≤ 4096 rows at any data size), so collect_list is
-    # a bounded buffer, not a data-sized one.
-    hist = counts.groupBy(F.shiftright(F.col("v"), half).alias("b")).agg(
-        F.sum("cnt").cast("long").alias("c")
+    ranks = counts.agg(F.sum("cnt").cast("long").alias("n")).select(
+        F.lit(0).alias("idx"), F.expr("(n + 1L) DIV 2").alias("k")
     )
-    sel1 = (
-        hist.crossJoin(F.broadcast(nk))
-        .groupBy()
-        .agg(
-            F.first("n").alias("n"),
-            F.first("k").alias("k"),
-            F.sort_array(F.collect_list(F.struct("b", "c"))).alias("h"),
-        )
-        .select("n", "k", F.expr(_fold("b", "c", "0L")).alias("s"))
-        .select("n", "k", F.col("s.key").alias("b"), F.col("s.r").alias("r0"))
-    )
-    # Pass 2: the exact value within that bucket (≤ 2^half distinct
-    # values by the audited domain bound), resuming the running count
-    # at r0 = count(v in earlier buckets).
-    state = (
-        counts.crossJoin(F.broadcast(sel1))
-        .where(F.shiftright(F.col("v"), half) == F.col("b"))
-        .groupBy()
-        .agg(
-            F.first("n").alias("n"),
-            F.first("k").alias("k"),
-            F.first("r0").alias("r0"),
-            F.sort_array(F.collect_list(F.struct("v", "cnt"))).alias("h"),
-        )
-        .select("n", "k", F.expr(_fold("v", "cnt", "r0")).alias("s"))
-        .select("n", "k", F.col("s.key").alias("hi"), F.col("s.r").alias("r"))
-    )
+    sel = _radix_select(counts, [], ranks)
     return (
-        counts.crossJoin(F.broadcast(state))
+        counts.crossJoin(F.broadcast(sel))
         .groupBy()
         .agg(
-            F.first("n").alias("n"),
+            F.sum("cnt").cast("long").alias("n"),
             F.first("k").alias("k"),
-            F.first("hi").alias("median_cents"),
-            (F.first("hi") / F.lit(100.0)).alias("median_price"),
+            F.first("val").alias("median_cents"),
+            (F.first("val") / F.lit(100.0)).alias("median_price"),
             F.first("r").alias("n_below"),
-            F.sum(F.when(F.col("v") == F.col("hi"), F.col("cnt")).otherwise(0))
+            F.sum(F.when(F.col("v") == F.col("val"), F.col("cnt")).otherwise(0))
             .cast("long")
             .alias("n_at"),
             F.sum(

@@ -479,10 +479,11 @@ def text_minhash_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and its n_candidates sum was DROPPED by the final select anyway.
     # Both sides are distinct (doc_a < doc_b) pair sets, so
     # |intersection| = count of candidates surviving a LEFT SEMI join
-    # against the BROADCAST truth: the candidate side streams with no
-    # exchange. n_true_pairs counts truth alone. Same two output values
+    # against the BROADCAST truth. The semi-join removes the full-outer
+    # SMJ exchange; the .distinct() shuffle of all candidate pairs
+    # remains. n_true_pairs counts truth alone. Same two output values
     # (n_recalled = the full-outer's sum(is_cand AND is_truth) since
-    # both inputs are duplicate-free), no candidate-sized shuffle.
+    # both inputs are duplicate-free).
     # COUNT over zero rows is 0 (never NULL), matching the oracle's
     # COUNT(*) on an all-empty regenerated fixture (r6 review).
     recalled = pairs.join(F.broadcast(truth), ["doc_a", "doc_b"], "left_semi")

@@ -14,6 +14,19 @@ if REPO not in sys.path:
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
+def write_parquet(dirpath, name: str, frame) -> str:
+    """Write a pandas frame as ``<dirpath>/<name>.parquet``; returns the
+    dir, shaped like an sf_dir, so a test drives a registered gate."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.Table.from_pandas(frame, preserve_index=False),
+        f"{dirpath}/{name}.parquet",
+    )
+    return str(dirpath)
+
+
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_SHUFFLE", "8")

@@ -1,17 +1,28 @@
-"""Unit tests for §2.4 aggregation operators on tiny inline frames +
-oracle parity at smoke scale."""
+"""Unit tests for §2.4 aggregation operators on tiny inline frames,
+synthetic parquet fixtures checked against independent Python
+references, and oracle parity at smoke scale."""
 
 from __future__ import annotations
 
+import math
+import os
+import random
+import shutil
+import struct
+import types
+
+import pandas as pd
 import pytest
 
-from big_data_flight_spark.operators.aggregates import flagship
+import big_data_flight_spark.operators.aggregates as agg
+from big_data_flight_spark.io import table
+from big_data_flight_spark.plans.snapshot import plan_text
 from big_data_flight_spark.registry import _REGISTRY, _load_all_operator_modules
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, write_parquet
 
 
 def test_flagship_shape(spark):
-    df = flagship(spark, SF_SMOKE)
+    df = agg.flagship(spark, SF_SMOKE)
     rows = df.collect()
     assert 0 < len(rows) <= 6  # |returnflag| x |linestatus| combos
     r = rows[0]
@@ -39,3 +50,192 @@ def _oracle_parity(spark, duck, name):
 @pytest.mark.parametrize("name", ["agg_groupby", "agg_stats", "agg_percentile"])
 def test_agg_oracle_parity_smoke(spark, duck, name):
     _oracle_parity(spark, duck, name)
+
+
+# ---------------------------------------------------------------------------
+# agg_percentile: two result-identical forms, picked by the lineitem scan size
+# ---------------------------------------------------------------------------
+
+
+def _pctl_rows(spark, form: str, sf_dir: str = SF_SMOKE) -> dict:
+    rows = getattr(agg, form)(table(spark, sf_dir, "lineitem")).collect()
+    return {
+        r["l_returnflag"]: (r["p50_price"], r["p90_price"], r["p99_price"])
+        for r in rows
+    }
+
+
+def _bits(xs) -> list[bytes]:
+    return [struct.pack(">d", x) for x in xs]
+
+
+@pytest.mark.parametrize("form", ["_pctl_sorted", "_pctl_bounded"])
+def test_pctl_form_oracle_parity_smoke(spark, duck, form):
+    """Each form, forced by a direct call, matches DuckDB's quantile_cont."""
+    from tools.compare import compare_one
+
+    _load_all_operator_modules()
+    q = types.SimpleNamespace(
+        builder=lambda sp, d: getattr(agg, form)(table(sp, d, "lineitem")),
+        oracle=_REGISTRY["agg_percentile"].oracle,
+        expected_empty=None,
+    )
+    r = compare_one(spark, duck, "agg_percentile", q, SF_SMOKE)
+    assert r["status"] == "OK", r
+
+
+def test_pctl_bounded_bit_identical_to_sorted(spark):
+    """The two agg_percentile forms must agree to the BIT (the oracle
+    compare hashes the values; 'close' is not equal). Compared via IEEE bit
+    patterns, not float ==, so a -0.0/0.0 or NaN slip would fail."""
+    a = _pctl_rows(spark, "_pctl_sorted")
+    b = _pctl_rows(spark, "_pctl_bounded")
+    assert set(a) == set(b)
+    for g in a:
+        assert _bits(a[g]) == _bits(b[g]), (g, a[g], b[g])
+
+
+def test_pctl_bounded_plan_has_no_data_sized_collect(spark):
+    """The bounded form's whole point (§5): no data-sized per-group
+    buffer. Its plan must show the radix bucketing (shiftright) and
+    must NOT collect raw l_extendedprice rows into one array — every
+    collect_list runs above the (group, value)/(group, bucket)
+    aggregates, whose width is domain-bounded (≤4096)."""
+    plan = plan_text(agg._pctl_bounded(table(spark, SF_SMOKE, "lineitem")))
+    # No raw-row collect anywhere (the sorted form's data-sized buffer
+    # signature is collect_list over bare l_extendedprice)...
+    assert "collect_list(l_extendedprice" not in plan
+    # ...every collect runs over (key, count) histogram structs, above
+    # the compact checkpointed count table (ExistingRDD).
+    assert "collect_list(struct(" in plan
+    assert "ExistingRDD" in plan
+
+
+def test_pctl_default_form_unchanged_at_fixture_scale(spark):
+    """The size switch must keep the sorted form at fixture scale (the
+    bench-comparability contract): bench numbers measure the same plan
+    as before the bounded form existed."""
+    plan = plan_text(agg.agg_percentile(spark, SF_SMOKE))
+    assert "collect_list(l_extendedprice" in plan
+    assert "shiftright" not in plan
+    assert "ExistingRDD" not in plan  # no checkpoint in the bench path
+
+
+def test_pctl_form_follows_scan_size_not_layout(spark, tmp_path, monkeypatch):
+    """The same lineitem stored as one file and as a partitioned
+    directory (the 100 TB layout) picks the same form: the switch reads
+    the size Spark reports for the scan, not a file-system inode."""
+    src = f"{SF_SMOKE}/lineitem.parquet"
+    flat = tmp_path / "flat"
+    flat.mkdir()
+    shutil.copy(src, flat / "lineitem.parquet")
+    parts = tmp_path / "parts"
+    (parts / "lineitem.parquet").mkdir(parents=True)
+    shutil.copy(src, parts / "lineitem.parquet" / "part-00000.parquet")
+    monkeypatch.setattr(agg, "_pctl_sorted", lambda li: "sorted")
+    monkeypatch.setattr(agg, "_pctl_bounded", lambda li: "bounded")
+    size = os.path.getsize(src)
+    for threshold, want in ((size // 2, "bounded"), (size * 2, "sorted")):
+        monkeypatch.setattr(agg, "_PCTL_BOUNDED_BYTES", threshold)
+        picked = [agg.agg_percentile(spark, str(d)) for d in (flat, parts)]
+        assert picked == [want, want], threshold
+
+
+# ---------------------------------------------------------------------------
+# _radix_select: both agg_percentile forms against an independent reference
+# ---------------------------------------------------------------------------
+
+
+def _quantile_cont(xs: list[float], p: float) -> float:
+    """Linear-interpolation percentile in plain Python floats (IEEE
+    doubles): the k-th order statistics around (n-1)*p, weighted by
+    their distance to it."""
+    xs = sorted(xs)
+    pos = (len(xs) - 1) * p
+    lo = math.floor(pos)
+    if pos == lo:
+        return xs[lo]
+    return xs[lo] * (math.ceil(pos) - pos) + xs[lo + 1] * (pos - lo)
+
+
+def test_pctl_forms_match_reference_bits(spark, tmp_path):
+    """Synthetic groups aimed at the kernel's edges: a 1-row group (all
+    ranks cap at k_hi = least(.., n) = 1), a 2-row group, heavy
+    duplicates, values straddling the 4096- and 8192-cent bucket
+    boundaries, and a spread-out random group."""
+    rng = random.Random(11)
+    groups = {
+        "A": [7.25],
+        "B": [3.10, 1.05],
+        "C": [2.00] * 50 + [5.00] * 30 + [9.99] * 19 + [123.45],
+        "D": [40.95] * 3 + [40.96] * 4 + [81.91, 81.92, 0.01, 100000.00],
+        "E": [round(rng.uniform(0.01, 104999.0), 2) for _ in range(301)],
+    }
+    frame = pd.DataFrame(
+        [(g, v) for g, vs in groups.items() for v in vs],
+        columns=["l_returnflag", "l_extendedprice"],
+    )
+    sf = write_parquet(tmp_path, "lineitem", frame)
+    want = {g: tuple(_quantile_cont(vs, p) for p in (0.5, 0.9, 0.99)) for g, vs in groups.items()}
+    for form in ("_pctl_sorted", "_pctl_bounded"):
+        got = _pctl_rows(spark, form, sf)
+        assert set(got) == set(want), form
+        for g in want:
+            assert _bits(got[g]) == _bits(want[g]), (form, g, got[g], want[g])
+
+
+# ---------------------------------------------------------------------------
+# agg_median_bisect: the kernel's ungrouped case on synthetic fixtures
+# ---------------------------------------------------------------------------
+
+
+class TestMedianBisect:
+    def _run(self, spark, tmp_path, prices):
+        sf = write_parquet(tmp_path, "lineitem", pd.DataFrame({"l_extendedprice": prices}))
+        [row] = agg.agg_median_bisect(spark, sf).collect()
+        return row
+
+    def test_odd_with_duplicates(self, spark, tmp_path):
+        # sorted cents: 100, 200, 200, 300, 1000 -> k=3 -> 200
+        row = self._run(spark, tmp_path, [3.00, 2.00, 10.00, 1.00, 2.00])
+        assert (row.n, row.k) == (5, 3)
+        assert row.median_cents == 200
+        assert row.median_price == 2.00
+        assert (row.n_below, row.n_at) == (1, 2)
+        assert row.n_over_domain == 0
+
+    def test_even_lower_median(self, spark, tmp_path):
+        # n=4 -> k=(4+1) DIV 2 = 2 -> second smallest
+        row = self._run(spark, tmp_path, [4.00, 1.00, 3.00, 2.00])
+        assert (row.n, row.k) == (4, 2)
+        assert row.median_cents == 200
+        assert (row.n_below, row.n_at) == (1, 1)
+
+    def test_matches_sorted_reference(self, spark, tmp_path):
+        rng = random.Random(7)
+        prices = [round(rng.uniform(0.01, 120000.0), 2) for _ in range(500)]
+        row = self._run(spark, tmp_path, prices)
+        cents = sorted(math.floor(p * 100 + 0.5) for p in prices)
+        k = (len(cents) + 1) // 2
+        assert row.median_cents == cents[k - 1]
+        assert row.n_below == sum(c < cents[k - 1] for c in cents)
+
+    # The cross-PASS invariants the generic cases don't isolate: the r0
+    # running-count carry from pass 1 (bucket prefix) into pass 2, and
+    # selection exactly AT a 2^12 bucket boundary.
+
+    def test_median_in_later_bucket_carries_prefix_count(self, spark, tmp_path):
+        # cents 100, 5000, 10000, 15000, 20000 — one value per high-bit
+        # bucket (0,1,2,3,4); k=3 selects bucket 2 with r0=2 carried.
+        row = self._run(spark, tmp_path, [1.00, 50.00, 100.00, 150.00, 200.00])
+        assert (row.n, row.k) == (5, 3)
+        assert row.median_cents == 10000
+        assert (row.n_below, row.n_at) == (2, 1)
+
+    def test_duplicates_straddling_bucket_boundary(self, spark, tmp_path):
+        # cents 4095 (last of bucket 0) x2, 4096 (first of bucket 1) x3;
+        # k=3 -> median is the FIRST value of bucket 1 with r0=2.
+        row = self._run(spark, tmp_path, [40.95, 40.95, 40.96, 40.96, 40.96])
+        assert (row.n, row.k) == (5, 3)
+        assert row.median_cents == 4096
+        assert (row.n_below, row.n_at) == (2, 3)

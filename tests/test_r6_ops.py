@@ -17,13 +17,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-
-def _write(dirpath, name, frame) -> str:
-    pq.write_table(
-        pa.Table.from_pandas(frame, preserve_index=False),
-        f"{dirpath}/{name}.parquet",
-    )
-    return str(dirpath)
+from tests.conftest import write_parquet
 
 
 def _write_embeddings(tmp_path, vecs: dict[int, list[float]]) -> str:
@@ -211,7 +205,7 @@ class TestFnUrl:
                 "n_chars": [1, 1, 1, 1],
             }
         )
-        sf = _write(tmp_path, "documents", docs)
+        sf = write_parquet(tmp_path, "documents", docs)
         got = {r.doc_id: r for r in fn_url(spark, sf).collect()}
 
         # host/path labels are md5-derived (URI-charset safety — see
@@ -263,7 +257,7 @@ class TestFnUrl:
                 "n_chars": [1, 1, 1],
             }
         )
-        sf = _write(tmp_path, "documents", docs)
+        sf = write_parquet(tmp_path, "documents", docs)
         rows = fn_url(spark, sf).collect()
         assert len(rows) == 3
         for r in rows:
@@ -288,7 +282,7 @@ class TestAudioResample:
                 "n_chars": [0] * 4,
             }
         )
-        sf = _write(tmp_path, "documents", docs)
+        sf = write_parquet(tmp_path, "documents", docs)
         got = {r.doc_id: r for r in mm_audio_resample_wav(spark, sf).collect()}
         for d in ids:
             step = d % 13 + 1
@@ -336,7 +330,7 @@ class TestRetentionExpire:
                 "props": ["{}"] * 10,
             }
         )
-        sf = _write(tmp_path, "events", events)
+        sf = write_parquet(tmp_path, "events", events)
         got = {r.dt: r for r in sink_retention_expire(spark, sf).collect()}
         assert set(got) == {"2024-01-08", "2024-01-20"}
         assert (got["2024-01-08"].min_id, got["2024-01-08"].max_id) == (6, 7)
@@ -371,7 +365,7 @@ class TestBm25:
                 "n_chars": [len(t) for t in texts],
             }
         )
-        sf = _write(tmp_path, "documents", docs)
+        sf = write_parquet(tmp_path, "documents", docs)
         got = {r.doc_id: r for r in text_bm25(spark, sf).collect()}
         assert set(got) == {0, 1, 3}
 
@@ -488,7 +482,7 @@ class TestAttribution:
                 "props": ["{}"] * len(rows),
             }
         )
-        sf = _write(tmp_path, "events", events)
+        sf = write_parquet(tmp_path, "events", events)
         got = {
             (r.model, r.channel): r.n_conversions
             for r in evt_attribution(spark, sf).collect()
@@ -529,7 +523,7 @@ class TestBitmapRollingDistinct:
                 "props": ["{}"] * len(rows),
             }
         )
-        sf = _write(tmp_path, "events", events)
+        sf = write_parquet(tmp_path, "events", events)
         got = {
             r.day_str: (r.n_active_users_7d, r.n_users_today)
             for r in agg_bitmap_rolling_distinct(spark, sf).collect()

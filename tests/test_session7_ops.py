@@ -14,70 +14,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-
-def _write(dirpath, name: str, frame: pd.DataFrame) -> str:
-    pq.write_table(
-        pa.Table.from_pandas(frame, preserve_index=False),
-        f"{dirpath}/{name}.parquet",
-    )
-    return str(dirpath)
-
-
-class TestMedianBisect:
-    def _run(self, spark, tmp_path, prices):
-        from big_data_flight_spark.operators.aggregates import agg_median_bisect
-
-        sf = _write(tmp_path, "lineitem", pd.DataFrame({"l_extendedprice": prices}))
-        [row] = agg_median_bisect(spark, sf).collect()
-        return row
-
-    def test_odd_with_duplicates(self, spark, tmp_path):
-        # sorted cents: 100, 200, 200, 300, 1000 -> k=3 -> 200
-        row = self._run(spark, tmp_path, [3.00, 2.00, 10.00, 1.00, 2.00])
-        assert (row.n, row.k) == (5, 3)
-        assert row.median_cents == 200
-        assert row.median_price == 2.00
-        assert (row.n_below, row.n_at) == (1, 2)
-        assert row.n_over_domain == 0
-
-    def test_even_lower_median(self, spark, tmp_path):
-        # n=4 -> k=(4+1) DIV 2 = 2 -> second smallest
-        row = self._run(spark, tmp_path, [4.00, 1.00, 3.00, 2.00])
-        assert (row.n, row.k) == (4, 2)
-        assert row.median_cents == 200
-        assert (row.n_below, row.n_at) == (1, 1)
-
-    def test_matches_sorted_reference(self, spark, tmp_path):
-        import random
-
-        rng = random.Random(7)
-        prices = [round(rng.uniform(0.01, 120000.0), 2) for _ in range(500)]
-        row = self._run(spark, tmp_path, prices)
-        cents = sorted(math.floor(p * 100 + 0.5) for p in prices)
-        k = (len(cents) + 1) // 2
-        assert row.median_cents == cents[k - 1]
-        assert row.n_below == sum(c < cents[k - 1] for c in cents)
-
-    # r12: the two-pass bounded-histogram form replaced the 24-round
-    # bit loop — pin the cross-PASS invariants the generic cases don't
-    # isolate: the r0 running-count carry from pass 1 (bucket prefix)
-    # into pass 2, and selection exactly AT a 2^12 bucket boundary.
-
-    def test_median_in_later_bucket_carries_prefix_count(self, spark, tmp_path):
-        # cents 100, 5000, 10000, 15000, 20000 — one value per high-bit
-        # bucket (0,1,2,3,4); k=3 selects bucket 2 with r0=2 carried.
-        row = self._run(spark, tmp_path, [1.00, 50.00, 100.00, 150.00, 200.00])
-        assert (row.n, row.k) == (5, 3)
-        assert row.median_cents == 10000
-        assert (row.n_below, row.n_at) == (2, 1)
-
-    def test_duplicates_straddling_bucket_boundary(self, spark, tmp_path):
-        # cents 4095 (last of bucket 0) x2, 4096 (first of bucket 1) x3;
-        # k=3 -> median is the FIRST value of bucket 1 with r0=2.
-        row = self._run(spark, tmp_path, [40.95, 40.95, 40.96, 40.96, 40.96])
-        assert (row.n, row.k) == (5, 3)
-        assert row.median_cents == 4096
-        assert (row.n_below, row.n_at) == (2, 3)
+from tests.conftest import write_parquet
 
 
 class TestKmeansLloyd:
@@ -208,7 +145,7 @@ class TestHeavyHitters:
                 eid += 1
         frame = pd.DataFrame(rows)
         frame["ts"] = frame["ts"].astype("datetime64[us]")
-        sf = _write(tmp_path, "events", frame)
+        sf = write_parquet(tmp_path, "events", frame)
         out = {r.user_id: r for r in agg_heavy_hitters(spark, sf).collect()}
         # 69 < threshold: even if the sketch inflates user 1002 into
         # the candidate set, the exact verify must drop it.
@@ -223,7 +160,7 @@ class TestLmScore:
     def test_hand_corpus_oov_path(self, spark, tmp_path):
         from big_data_flight_spark.operators.text import text_lm_score
 
-        sf = _write(
+        sf = write_parquet(
             tmp_path,
             "documents",
             pd.DataFrame(
@@ -253,7 +190,7 @@ class TestLmScore:
     def test_no_seen_bigrams_is_null_mean(self, spark, tmp_path):
         from big_data_flight_spark.operators.text import text_lm_score
 
-        sf = _write(
+        sf = write_parquet(
             tmp_path,
             "documents",
             pd.DataFrame(
@@ -283,7 +220,7 @@ class TestSceneCut:
             mm_scene_cut_ppm,
         )
 
-        sf = _write(
+        sf = write_parquet(
             tmp_path,
             "documents",
             pd.DataFrame(
@@ -335,7 +272,7 @@ class TestDynamicPartitionPruning:
                 eid += 1
         frame = pd.DataFrame(rows)
         frame["ts"] = frame["ts"].astype("datetime64[us]")
-        sf = _write(tmp_path, "events", frame)
+        sf = write_parquet(tmp_path, "events", frame)
         got = {r.event_type: r for r in join_partition_pruned_runtime(spark, sf).collect()}
         # Only the two most popular types survive the runtime prune,
         # and their aggregates match the source exactly (lossless
@@ -375,7 +312,7 @@ class TestUdtfTableArgs:
             )
         frame = pd.DataFrame(rows)
         frame["ts"] = frame["ts"].astype("datetime64[us]")
-        sf = _write(tmp_path, "events", frame)
+        sf = write_parquet(tmp_path, "events", frame)
         got = {r.user_id: r for r in udtf_table_args(spark, sf).collect()}
         u1 = got[1]
         assert (u1.n_events, u1.n_purchases) == (4, 2)
