@@ -1,4 +1,4 @@
-"""Smoke test for the bench harness itself.
+"""Smoke tests for the two measurement harnesses.
 
 The driver records BENCH_r{N}.json by running `python bench.py`; if
 the harness crashes (a renamed gate, a broken override, a JSON
@@ -6,12 +6,18 @@ regression) the round silently loses its perf artifact. This runs the
 real main() over a 3-query headline slice at sf0.001 — covering the
 prepared-plan path, the eager-builder (streaming) path, the per-query
 shuffle override, and the prev-round delta machinery — and checks the
-emitted JSON contract.
+emitted JSON contract. The same holds for tools/gate_profile.py, which
+writes BENCH_PANEL2.json and the PROFILE_*.json layer records.
 """
 
 from __future__ import annotations
 
 import json
+import os
+import subprocess
+import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_bench_main_emits_contract_json(spark, monkeypatch, capsys):
@@ -114,61 +120,68 @@ def test_shuffle_override_lever_is_live(spark, monkeypatch):
         sess.configure(spark)
 
 
-def test_bench_panel2_emits_contract_json(spark, monkeypatch, capsys):
-    """Panel-2 harness smoke (VERDICT r9 #3): the round routine records
-    BENCH_PANEL2.json by running tools/bench_panel2.py; a renamed gate
-    or harness crash would silently drop the panel. Run the real main()
-    over a 2-gate slice at sf0.001 and check the JSON contract."""
-    from tools import bench_panel2
+def _profile(tmp_path, *gates):
+    """Run tools/gate_profile.py at sf0.001 in a process of its own: it stops
+    its session on exit, and the event-log confs it needs are static, so
+    it cannot share this session."""
+    out = tmp_path / "profile.json"
+    proc = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", "gate_profile.py"), *gates,
+         "--sf", "0.001", "--out", str(out)],
+        cwd=REPO, capture_output=True, text=True, timeout=600,
+    )
+    data = json.loads(out.read_text()) if out.exists() else None
+    return proc, data
 
-    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    monkeypatch.setenv("BENCH_RUNS", "1")
-    monkeypatch.setenv("PANEL2_NO_ARTIFACT", "1")
-    slice_ = ["mm_interleaved_pack", "agg_median_bisect"]
-    monkeypatch.setattr(bench_panel2, "PANEL", slice_)
 
-    rc = bench_panel2.main()
-    out = capsys.readouterr().out
-    lines = [ln for ln in out.splitlines() if ln.startswith('{"metric"')]
-    assert rc == 0 and len(lines) == 1, out
-    data = json.loads(lines[0])
-    assert data["unit"] == "sec" and data["sf"] == 0.001
-    assert set(data["queries"]) == set(slice_)
+def test_profile_emits_contract_json(tmp_path):
+    """The profile tool writes BENCH_PANEL2.json and PROFILE_*.json; a
+    renamed gate or harness crash would silently drop them. One lazy and
+    one eager (streaming) gate: both timed builder-inclusive, both with a
+    layer record, every Spark job attributed to a gate."""
+    gates = ["mm_interleaved_pack", "stream_windowed_agg"]
+    proc, data = _profile(tmp_path, *gates)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert data["unit"] == "sec" and data["sf"] == 0.001 and data["cores"] >= 1
+    assert set(data["queries"]) == set(gates)
     assert all(v >= 0 for v in data["queries"].values()), data["queries"]
-    assert data["value"] > 0
-    # sf0.001 != 0.1: the retry pass must not run, so no noise flags
-    assert data["noise_suspected"] == []
-    # every committed record must name a PANEL gate (catches renames)
-    assert set(bench_panel2.BEST_KNOWN) <= set(
-        ["graph_pagerank_converged", "sql_recursive_bfs",
-         "text_bpe_merge_train", "sim_ivf_pq", "sim_kmeans_lloyd",
-         "text_dedup_clusters_sliced", "agg_median_bisect",
-         "stream_windowed_agg", "mm_interleaved_pack",
-         "text_substring_dedup_clean"]
-    )
+    assert data["value"] > 0 and "errors" not in data
+    assert len(data["steal_pct"]) == 4 and data["protocol"]
+    assert data["unattributed_jobs"] == 0
+    for g in gates:
+        assert data["layers"][g]["build.ms"] > 0 and "exec.ms" in data["layers"][g], data["layers"][g]
 
 
-def test_bench_panel2_fails_loud_on_gate_error(spark, monkeypatch, capsys):
-    """ADVICE r10: a panel gate that errors used to be recorded as
-    -1.0, excluded from the total, and the tool still exited 0 — a
-    committed artifact could silently miss gates while reading green.
-    main() must now return nonzero and list the failed gates in an
-    'errors' field."""
-    from tools import bench_panel2
-
-    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    monkeypatch.setenv("BENCH_RUNS", "1")
-    monkeypatch.setenv("PANEL2_NO_ARTIFACT", "1")
-    monkeypatch.setattr(
-        bench_panel2, "PANEL", ["mm_interleaved_pack", "no_such_gate_xyz"]
-    )
-
-    rc = bench_panel2.main()
-    out = capsys.readouterr().out
-    lines = [ln for ln in out.splitlines() if ln.startswith('{"metric"')]
-    assert rc != 0 and len(lines) == 1, out
-    data = json.loads(lines[0])
+def test_profile_fails_loud_on_gate_error(tmp_path):
+    """A gate that errors is recorded as -1.0 and left out of the total;
+    the run must then exit nonzero and name the gate under 'errors', not
+    exit green with a short total that reads as fast."""
+    proc, data = _profile(tmp_path, "mm_interleaved_pack", "no_such_gate_xyz")
+    assert proc.returncode != 0, proc.stderr[-3000:]
     assert data["errors"] == ["no_such_gate_xyz"]
     assert data["queries"]["no_such_gate_xyz"] == -1.0
-    # the healthy gate still timed and still contributes to the total
-    assert data["queries"]["mm_interleaved_pack"] >= 0
+    # the healthy gate still timed and still makes the total
+    assert data["queries"]["mm_interleaved_pack"] > 0
+    assert data["value"] == data["queries"]["mm_interleaved_pack"]
+
+
+def test_profile_gate_sets_are_registered():
+    """Every panel and headline name is a registered gate (catches
+    renames), and the headline set read from bench.py's source is
+    bench.HEADLINE."""
+    import bench
+    from big_data_flight_spark.registry import _REGISTRY, _load_all_operator_modules
+    from tools import gate_profile
+
+    _load_all_operator_modules()
+    assert len(gate_profile.PANEL) == 10
+    assert gate_profile.headline() == bench.HEADLINE
+    assert not (set(gate_profile.PANEL) | set(bench.HEADLINE)) - set(_REGISTRY)
+
+
+def test_no_tool_shadows_a_stdlib_module():
+    """`python tools/<x>.py` puts tools/ first on sys.path, so a tool named
+    like a standard-library module (e.g. profile, which pyspark's cProfile
+    import loads) breaks every sibling script run that way."""
+    names = {f[:-3] for f in os.listdir(os.path.join(REPO, "tools")) if f.endswith(".py")}
+    assert not names & sys.stdlib_module_names
