@@ -4,9 +4,9 @@ All group-bys are plain ``df.groupBy().agg()``: Spark plans these as
 HashAggregateExec partial→final pairs (map-side combine before the
 shuffle), which is exactly the 100 TB-scale shape — the shuffle moves
 one row per (partition, group), not per input row. The only physical
-hint is the flagship's conditional ``fan_out`` (io.py): single-split
+hint is the flagship's conditional ``fan_out`` (io.py): single-row-group
 fixture scans otherwise run the whole wide-decimal partial aggregate
-in ONE task; on a many-split cluster scan it is a no-op. AQE coalesces
+in ONE task; on a large or multi-file scan it is a no-op. AQE coalesces
 the post-shuffle side.
 
 Oracle parity: every double SUM/AVG uses the exact DECIMAL(38,6) path
@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from big_data_flight_spark.io import fan_out, table
+from big_data_flight_spark.io import fan_out, scan_bytes, table
 from big_data_flight_spark.registry import DAVG, DSUM, davg, dsum, gate_query
 
 # ---------------------------------------------------------------------------
@@ -53,11 +53,11 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     for (FIXTURES.md: lineitem carries exactly the Q1 column set).
     Plan shape: parquet scan with PushedFilters on l_shipdate →
     partial HashAggregate → single shuffle on the 2 group keys →
-    final HashAggregate. ``fan_out`` widens the single-split fixture
-    scan so the 8 DECIMAL(38,6) partial aggregates run on every core
-    (1.10 s → 0.53 s at sf0.1); it is a no-op on multi-split inputs.
+    final HashAggregate. ``fan_out`` widens the single-row-group
+    fixture scan so the 8 DECIMAL(38,6) partial aggregates run on every
+    core; it is a no-op on large or multi-file inputs.
     """
-    li = fan_out(table(spark, sf_dir, "lineitem"))
+    li = fan_out(table(spark, sf_dir, "lineitem"), "l_orderkey")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
     return (
@@ -315,8 +315,7 @@ def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg_median_bisect); selection and interpolation read the raw
     doubles, never the cents."""
     li = table(spark, sf_dir, "lineitem")
-    scan_bytes = li._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    if int(scan_bytes) >= _PCTL_BOUNDED_BYTES:
+    if scan_bytes(li) >= _PCTL_BOUNDED_BYTES:
         return _pctl_bounded(li)
     return _pctl_sorted(li)
 

@@ -1256,7 +1256,7 @@ def text_ngram_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ELSE array() END"
     )
     return (
-        fan_out(d).select("doc_id", toks.alias("toks"))
+        fan_out(d, "doc_id").select("doc_id", toks.alias("toks"))
         .select("doc_id", F.explode(bigrams).alias("bigram"))
         .groupBy("bigram")
         .agg(
@@ -3234,7 +3234,7 @@ def text_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-boundaries/no-boundaries tails; at ~{_CDC_MOD}-char expected
     chunks the fixture corpus needs no clamp (documented boundary)."""
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
-    chunks = fan_out(d).mapInPandas(_cdc_chunks, "doc_id long, ch string, clen long")
+    chunks = fan_out(d, "doc_id").mapInPandas(_cdc_chunks, "doc_id long, ch string, clen long")
     chunks = chunks.localCheckpoint()  # two consumers: freq + per-doc rollup
     freq = chunks.groupBy("ch").agg(F.countDistinct("doc_id").alias("ndocs"))
     return (

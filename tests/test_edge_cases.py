@@ -3,6 +3,10 @@ empty groups, degenerate joins."""
 
 from __future__ import annotations
 
+import contextlib
+import os
+import re
+
 import big_data_flight_spark.operators.text as text_mod
 from big_data_flight_spark.operators.text import shingles
 
@@ -148,19 +152,62 @@ def test_frequency_cap_drops_hot_shingles_and_audits(spark):
     assert pair["jaccard"] <= 6 / 7
 
 
+@contextlib.contextmanager
+def _sql_conf(spark, key, value):
+    """Set one SQL conf for the duration of a block, then restore it."""
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _last_job_id(sc) -> int:
+    group = sc.getLocalProperty("spark.jobGroup.id")
+    return max(sc.statusTracker().getJobIdsForGroup(group), default=-1)
+
+
 def test_fan_out_noop_on_wide_input(spark):
-    """fan_out must widen single-split scans but leave already-parallel
-    inputs untouched (the 100 TB no-op contract)."""
+    """fan_out must widen a one-row-group scan but leave an input Spark
+    sizes at >= need maxPartitionBytes units untouched (the 100 TB
+    no-op contract, decided from plan statistics alone)."""
+    from big_data_flight_spark.io import fan_out, scan_bytes, table
+    from tests.conftest import SF_SMOKE
+
+    cores = spark.sparkContext.defaultParallelism
+    narrow = table(spark, SF_SMOKE, "lineitem")
+    widened = fan_out(narrow, "l_orderkey")
+    assert widened.rdd.getNumPartitions() == cores
+
+    need = max(2, cores // 2)
+    with _sql_conf(spark, "spark.sql.files.maxPartitionBytes", str(scan_bytes(narrow) // need)):
+        assert len(narrow.inputFiles()) < need  # only the size branch can fire
+        assert fan_out(narrow, "l_orderkey") is narrow  # no extra exchange added
+
+
+def test_fan_out_widens_one_row_group_cut_into_many_splits(spark):
+    """A one-row-group file cut into many splits still scans in ONE
+    task: every split but the one holding the row group reads nothing.
+    fan_out must count data-bearing units, not splits, widen with a
+    hash exchange on the caller's key (no round-robin sort), and decide
+    without launching a Spark job."""
     from big_data_flight_spark.io import fan_out, table
     from tests.conftest import SF_SMOKE
 
-    narrow = table(spark, SF_SMOKE, "lineitem")
-    assert narrow.rdd.getNumPartitions() == 1  # single-row-group fixture
-    widened = fan_out(narrow)
-    assert widened.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
-
-    wide = narrow.repartition(spark.sparkContext.defaultParallelism)
-    assert fan_out(wide) is wide  # no extra exchange added
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+    sf_dir = os.path.join(os.path.dirname(SF_SMOKE), "sf0.01")
+    with _sql_conf(spark, "spark.sql.files.openCostInBytes", "1024"):
+        li = table(spark, sf_dir, "lineitem")
+        assert li.rdd.getNumPartitions() == cores  # the split count looks wide
+        before = _last_job_id(sc)
+        widened = fan_out(li, "l_orderkey")
+        assert _last_job_id(sc) == before
+        assert widened is not li
+        plan = widened._jdf.queryExecution().executedPlan().toString()
+    assert re.search(rf"hashpartitioning\(l_orderkey#\d+L?, {cores}\)", plan), plan
+    assert "RoundRobinPartitioning" not in plan
 
 
 def test_fan_out_noop_on_multifile_scan(spark, tmp_path):
@@ -181,7 +228,7 @@ def test_fan_out_noop_on_multifile_scan(spark, tmp_path):
     )
     multi = spark.read.parquet(str(tmp_path / "li_multi"))
     assert multi.rdd.getNumPartitions() >= max(2, n_files // 2)
-    assert fan_out(multi) is multi
+    assert fan_out(multi, "l_orderkey") is multi
 
 
 def test_scratch_sweep_guards(tmp_path, monkeypatch):
