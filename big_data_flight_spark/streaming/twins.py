@@ -23,21 +23,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_flight_spark.io import ts_guard
+from big_data_flight_spark.io import footer_schema, table, ts_guard
 from big_data_flight_spark.operators.events import (
     EWMA_ORACLE,
     SESSION_WINDOW_NATIVE_ORACLE,
 )
 from big_data_flight_spark.registry import DSUM, dsum, gate_query
-
-# Footer-schema memo: events_stream is called per-builder (and the
-# stream_source_sink gate is timed builder-inclusive), so the
-# driver-side footer read is cached per path. Keyed on (path, mtime,
-# size) rather than path alone: the driver has regenerated fixtures
-# with different physical types once already (r3: ts ns→µs ntz), so a
-# mid-process fixture swap must MISS the memo and re-read the footer
-# instead of silently streaming with a stale schema (ADVICE r3).
-_SCHEMA_MEMO: dict[str, tuple[tuple[float, int], object]] = {}
 
 
 def _stream_source(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -45,22 +36,13 @@ def _stream_source(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     events_stream and documents_stream had verbatim copies — the exact
     silent-desync risk the r6 bigram-struct finding fixed by sharing).
     Streaming sources need an explicit schema; take it from the
-    parquet footer (driver-side metadata read, no data IO, memoized
-    per path + mtime/size stamp so fixture regeneration invalidates)."""
-    path = f"{sf_dir}/{name}.parquet"
-    st = os.stat(path)
-    stamp = (st.st_mtime, st.st_size)
-    hit = _SCHEMA_MEMO.get(path)
-    if hit is not None and hit[0] == stamp:
-        batch_schema = hit[1]
-    else:
-        batch_schema = spark.read.parquet(path).schema
-        _SCHEMA_MEMO[path] = (stamp, batch_schema)
-    return (
-        spark.readStream.schema(batch_schema)
-        .option("pathGlobFilter", f"{name}.parquet")
-        .parquet(sf_dir)
+    parquet footer through io.footer_schema, the same schema path
+    io.table uses, so a regenerated fixture is read afresh."""
+    reader = spark.readStream
+    reader._jreader = reader._jreader.schema(
+        footer_schema(spark, f"{sf_dir}/{name}.parquet")
     )
+    return reader.option("pathGlobFilter", f"{name}.parquet").parquet(sf_dir)
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -194,8 +176,6 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern for slowly-changing enrichment tables; at scale the
     static side should be broadcastable (as hinted here) or
     pre-bucketed."""
-    from big_data_flight_spark.io import table
-
     static_dim = (
         table(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
@@ -1120,9 +1100,7 @@ def stream_state_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = os.path.join(_TMP, "state_restore")
     _shutil.rmtree(root, ignore_errors=True)
     src_dir = os.path.join(root, "src")
-    ev = ts_guard(
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-    ).select("event_id", "event_type", "ts")
+    ev = table(spark, sf_dir, "events").select("event_id", "event_type", "ts")
     ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(
         os.path.join(src_dir, "half=a")
     )
@@ -1205,9 +1183,7 @@ def stream_ewma_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = os.path.join(_TMP, "ewma_bounded")
     _shutil.rmtree(root, ignore_errors=True)
     src = os.path.join(root, "src")
-    ev = ts_guard(spark.read.parquet(f"{sf_dir}/events.parquet")).select(
-        "user_id", "ts", "event_id", "value"
-    )
+    ev = table(spark, sf_dir, "events").select("user_id", "ts", "event_id", "value")
     k_files = 4
     staged = ev.withColumn(
         "f", F.ntile(k_files).over(_W.orderBy("ts", "event_id"))
@@ -1315,7 +1291,6 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the drain is a foreachBatch upsert and arrivals age out of state
     with a watermark on ingest time (the fixture source carries no
     event time, so this bounded drain stands in for one horizon)."""
-    from big_data_flight_spark.io import table
     from big_data_flight_spark.operators.text import (
         _INCR_BATCH_MOD,
         _INCR_JACCARD_T,
@@ -1433,7 +1408,7 @@ def stream_drift_tv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_flight_spark.operators.etl import _drift_tv_finish
 
     # Monitor config: global time/value bounds as O(1) scalars.
-    ev_b = ts_guard(spark.read.parquet(f"{sf_dir}/events.parquet")).select(
+    ev_b = table(spark, sf_dir, "events").select(
         F.floor(F.col("value") * 1000000 + 0.5).cast("long").alias("vu"),
         F.unix_micros("ts").alias("tu"),
     )
@@ -1586,7 +1561,7 @@ def stream_dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     the watermark — stream_dedup's dropDuplicatesWithinWatermark
     path — at the cost of missing late re-sends of old keys."""
     # Conservation scalar: one count off the batch footprint.
-    src_rows = spark.read.parquet(f"{sf_dir}/events.parquet").count()
+    src_rows = table(spark, sf_dir, "events").count()
 
     s = events_stream(spark, sf_dir)
     allowed = ("click", "error", "purchase", "signup", "view")

@@ -7,6 +7,8 @@ import contextlib
 import os
 import re
 
+import pytest
+
 import big_data_flight_spark.operators.text as text_mod
 from big_data_flight_spark.operators.text import shingles
 
@@ -231,6 +233,45 @@ def test_fan_out_noop_on_multifile_scan(spark, tmp_path):
     assert fan_out(multi, "l_orderkey") is multi
 
 
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_table_takes_schema_from_footer_without_a_job(spark, sf):
+    """io.table reads each table's schema from its parquet footer on
+    the driver: no schema-inference job, and exactly the schema Spark's
+    own inference job gives (events through the same ts guard)."""
+    from big_data_flight_spark.io import TABLES, table, ts_guard
+    from tests.conftest import SF_SMOKE
+
+    sc = spark.sparkContext
+    sf_dir = os.path.join(os.path.dirname(SF_SMOKE), sf)
+    for name in TABLES:
+        before = _last_job_id(sc)
+        df = table(spark, sf_dir, name)
+        assert _last_job_id(sc) == before, name
+        inferred = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        if name == "events":
+            inferred = ts_guard(inferred)
+        assert df.schema == inferred.schema, name
+
+
+def test_table_on_hive_partitioned_directory(spark, tmp_path):
+    """The 100 TB layout: a partitioned ``lineitem.parquet/`` directory
+    reads, without a job, the schema Spark infers (the partition column
+    last) and the same rows."""
+    from big_data_flight_spark.io import table
+    from tests.conftest import SF_SMOKE
+
+    path = str(tmp_path / "lineitem.parquet")
+    table(spark, SF_SMOKE, "lineitem").write.partitionBy("l_returnflag").parquet(path)
+    sc = spark.sparkContext
+    before = _last_job_id(sc)
+    got = table(spark, str(tmp_path), "lineitem")
+    assert _last_job_id(sc) == before
+    want = spark.read.parquet(path)
+    assert got.schema == want.schema
+    assert got.columns[-1] == "l_returnflag"
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
 def test_scratch_sweep_guards(tmp_path, monkeypatch):
     """_sweep_stale_scratch: a LIVE pid always protects its dir; dead
     pids are swept only after the idle-age gate (review finding r3)."""
@@ -264,25 +305,17 @@ def test_flagship_layout_invariant(spark, tmp_path):
     must produce identical values — the property that lets the engine
     move from the fixture to a partitioned 100 TB directory without a
     semantic change (io.table takes any path Spark can scan)."""
-    import big_data_flight_spark.operators.aggregates as agg_mod
     from big_data_flight_spark.io import table
+    from big_data_flight_spark.operators.aggregates import flagship
     from tests.conftest import SF_SMOKE
 
-    out = str(tmp_path / "li16")
-    table(spark, SF_SMOKE, "lineitem").repartition(16).write.mode(
-        "overwrite"
-    ).parquet(out)
+    table(spark, SF_SMOKE, "lineitem").repartition(16).write.parquet(
+        str(tmp_path / "lineitem.parquet")
+    )
 
-    single = agg_mod.flagship(spark, SF_SMOKE).collect()
-
-    orig = agg_mod.table
-    try:
-        agg_mod.table = lambda s, d, n: (
-            s.read.parquet(out) if n == "lineitem" else orig(s, d, n)
-        )
-        multi = agg_mod.flagship(spark, SF_SMOKE).collect()
-    finally:
-        agg_mod.table = orig
+    assert len(table(spark, str(tmp_path), "lineitem").inputFiles()) == 16
+    single = flagship(spark, SF_SMOKE).collect()
+    multi = flagship(spark, str(tmp_path)).collect()
 
     key = lambda r: (r["l_returnflag"], r["l_linestatus"])  # noqa: E731
     assert sorted(map(tuple, sorted(single, key=key))) == sorted(

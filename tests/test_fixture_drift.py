@@ -64,26 +64,29 @@ def test_events_stream_guards_ts_to_ltz(spark, tmp_path, unit):
     assert [(r.us, r["count"]) for r in out] == [(_US, 2)]
 
 
-def test_schema_memo_invalidates_on_fixture_swap(spark, tmp_path):
-    """A mid-process fixture regeneration (new mtime/size, different
-    physical type) must MISS the footer-schema memo and re-read —
-    never stream with the stale schema (ADVICE r3)."""
-    from big_data_flight_spark.streaming.twins import events_stream
+def test_fixture_swap_is_read_afresh(spark, tmp_path):
+    """A mid-process fixture regeneration (same path, different physical
+    type) must be read with the NEW footer by both io.table and
+    events_stream (ADVICE r3). A stale int64-ns schema applied to the
+    µs file would misread its values, so the second reads must still
+    give exactly _US."""
+    from big_data_flight_spark.io import table
+    from big_data_flight_spark.streaming.twins import events_stream, run_to_memory
 
-    _write_events(str(tmp_path), "ns")
-    first = dict(events_stream(spark, str(tmp_path)).dtypes)["ts"]
-    _write_events(str(tmp_path), "us")  # simulated driver regen
-    second = dict(events_stream(spark, str(tmp_path)).dtypes)["ts"]
-    # both guarded to LTZ, but the second MUST have re-read the footer:
-    # an ns-long stale schema applied to a µs file would misread values.
-    assert first == second == "timestamp"
-    from big_data_flight_spark.streaming.twins import _SCHEMA_MEMO
+    d = str(tmp_path)
 
-    path = os.path.join(str(tmp_path), "events.parquet")
-    assert path in _SCHEMA_MEMO
-    # memoized schema must be the µs one (TimestampNTZ), not ns int64
-    memo_schema = _SCHEMA_MEMO[path][1]
-    assert "timestamp" in memo_schema["ts"].dataType.typeName()
+    def batch_us():
+        df = table(spark, d, "events")
+        return {r.us for r in df.selectExpr("unix_micros(ts) AS us").collect()}
+
+    def stream_us():
+        out = run_to_memory(events_stream(spark, d).groupBy("ts").count())
+        return {r.us for r in out.selectExpr("unix_micros(ts) AS us").collect()}
+
+    _write_events(d, "ns")
+    assert batch_us() == stream_us() == {_US}
+    _write_events(d, "us")  # simulated driver regen, same path
+    assert batch_us() == stream_us() == {_US}
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
