@@ -171,7 +171,12 @@ def scan_bytes(df: DataFrame) -> int:
 def fan_out(df: DataFrame, key: str) -> DataFrame:
     """Hash-repartition a scan that holds too few data-bearing units to
     fill the cores, so CPU-heavy downstream work (wide decimal partial
-    aggregates, per-row array building) runs on every core.
+    aggregates, per-row array building, the pairs of a nested-loop
+    join) runs on every core. This is the package's one read-side
+    widening rule: operators call it rather than a literal
+    ``repartition(n)``. A BNLJ inherits its streamed side's
+    partitioning, so widen that side (the corpus against broadcast
+    queries, the left side of a self pair join).
 
     ``need = max(2, cores // 2)`` units, where a unit is one
     ``spark.sql.files.maxPartitionBytes`` slice of the input or one

@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from big_data_flight_spark.io import table
+from big_data_flight_spark.io import fan_out, table
 from big_data_flight_spark.registry import gate_query
 
 DIM = 64  # fixed embedding dimensionality (FIXTURES.md, verified)
@@ -148,14 +148,14 @@ def sim_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         _to_double(F.col("embedding")).alias("emb_d"),
     ).select("vec_id", "emb_d", _norm_d(F.col("emb_d")).alias("nrm"))
-    # The fixture is one parquet split → 1 partition, and a nested-loop
-    # join inherits the LEFT side's partitioning: repartition the left
-    # side or the whole quadratic stage runs on a single core.
-    a = v.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("emb_d").alias("emb_a"),
-        F.col("nrm").alias("norm_a"),
-    ).repartition(32)
+    a = fan_out(
+        v.select(
+            F.col("vec_id").alias("vec_a"),
+            F.col("emb_d").alias("emb_a"),
+            F.col("nrm").alias("norm_a"),
+        ),
+        "vec_a",
+    )
     b = v.select(
         F.col("vec_id").alias("vec_b"),
         F.col("emb_d").alias("emb_b"),
@@ -209,14 +209,16 @@ def sim_topk_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         _to_double(F.col("embedding")).alias("emb_q"),
     ).select("query_id", "emb_q", _norm_d(F.col("emb_q")).alias("nrm_q"))
-    # corpus side drives parallelism (queries are broadcast): fan the
-    # single parquet split out to all cores. Double-cast hoisted per
-    # vector (r13, the sim_cosine_pairs rule): _dot_d folds the same
-    # doubles in the same order, minus 128 per-pair casts.
-    c = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        _to_double(F.col("embedding")).alias("emb_c"),
-    ).select("neighbor_id", "emb_c", _norm_d(F.col("emb_c")).alias("nrm_c")).repartition(32)
+    # corpus side drives parallelism (queries are broadcast). Double-cast
+    # hoisted per vector (r13, the sim_cosine_pairs rule): _dot_d folds
+    # the same doubles in the same order, minus 128 per-pair casts.
+    c = fan_out(
+        e.select(
+            F.col("vec_id").alias("neighbor_id"),
+            _to_double(F.col("embedding")).alias("emb_c"),
+        ).select("neighbor_id", "emb_c", _norm_d(F.col("emb_c")).alias("nrm_c")),
+        "neighbor_id",
+    )
     cos = _dot_d(F.col("emb_q"), F.col("emb_c")) / (F.col("nrm_q") * F.col("nrm_c"))
     scored = (
         F.broadcast(q)
@@ -390,15 +392,8 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_a") < F.col("vec_b"))
         .distinct()
     )
-    # exact ≥0.3 pairs on the same slice, for recall accounting —
-    # repartitioned off the single fixture split so the nested-loop
-    # truth join spreads across cores (the sim_cosine_pairs rule;
-    # r6 review found this one missing it).
-    v = (
-        table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 500)
-        .repartition(32)
-    )
+    # exact ≥0.3 pairs on the same slice, for recall accounting
+    v = fan_out(table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 500), "vec_id")
     a = v.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"))
     b = v.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"))
     cos = _dot(F.col("ea"), F.col("eb")) / (_norm(F.col("ea")) * _norm(F.col("eb")))
@@ -458,9 +453,12 @@ def text_near_dedup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
     d = table(spark, sf_dir, "documents").select("doc_id", "lang")
     v = e.select("vec_id", "embedding", _norm(F.col("embedding")).alias("nrm"))
-    a = v.select(
-        F.col("vec_id").alias("doc_a"), F.col("embedding").alias("ea"), F.col("nrm").alias("na")
-    ).repartition(32)
+    a = fan_out(
+        v.select(
+            F.col("vec_id").alias("doc_a"), F.col("embedding").alias("ea"), F.col("nrm").alias("na")
+        ),
+        "doc_a",
+    )
     b = v.select(
         F.col("vec_id").alias("doc_b"), F.col("embedding").alias("eb"), F.col("nrm").alias("nb")
     )
@@ -549,9 +547,12 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "q_emb", "cell")
     )
     # search only within probed cells
-    corpus = e.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("label").alias("cell"), emb_dbl.alias("c_emb")
-    ).repartition(32)
+    corpus = fan_out(
+        e.select(
+            F.col("vec_id").alias("neighbor_id"), F.col("label").alias("cell"), emb_dbl.alias("c_emb")
+        ),
+        "neighbor_id",
+    )
     w_nn = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
     ivf_top = (
         probe.join(corpus, "cell")
@@ -673,12 +674,15 @@ def sim_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("emb_q"),
         _norm(F.col("embedding")).alias("nrm_q"),
     )
-    c = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("n_label"),
-        F.col("embedding").alias("emb_c"),
-        _norm(F.col("embedding")).alias("nrm_c"),
-    ).repartition(32)
+    c = fan_out(
+        e.select(
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("label").alias("n_label"),
+            F.col("embedding").alias("emb_c"),
+            _norm(F.col("embedding")).alias("nrm_c"),
+        ),
+        "neighbor_id",
+    )
     cos = _dot(F.col("emb_q"), F.col("emb_c")) / (F.col("nrm_q") * F.col("nrm_c"))
     scored = (
         F.broadcast(q)
@@ -765,9 +769,10 @@ def sim_rerank_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("emb_q")
     )
-    c = e.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("emb_c")
-    ).repartition(32)
+    c = fan_out(
+        e.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("emb_c")),
+        "neighbor_id",
+    )
     scored = (
         F.broadcast(q)
         .crossJoin(c)
@@ -1014,8 +1019,8 @@ def sim_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact with zero float-parity risk, and ties on the small 0..64
     Hamming range are broken by neighbor_id (total order, registry
     rule). Scale posture mirrors sim_topk_neighbors: the 8 query
-    signatures are broadcast, the corpus side streams (repartitioned
-    off the single fixture split); at 100 TB the corpus scan reads
+    signatures are broadcast, the corpus side streams (widened by
+    io.fan_out); at 100 TB the corpus scan reads
     8 bytes/vector instead of 256 — a 32x scan-bandwidth win — and
     the usual pipeline re-ranks the Hamming candidates with exact
     cosine (sim_rerank_pandas is that stage here)."""
@@ -1029,11 +1034,14 @@ def sim_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sig_lo").alias("q_lo"),
         F.col("sig_hi").alias("q_hi"),
     )
-    c = sigs.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("sig_lo").alias("c_lo"),
-        F.col("sig_hi").alias("c_hi"),
-    ).repartition(32)
+    c = fan_out(
+        sigs.select(
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("sig_lo").alias("c_lo"),
+            F.col("sig_hi").alias("c_hi"),
+        ),
+        "neighbor_id",
+    )
     ham = (
         F.bit_count(F.col("q_lo").bitwiseXOR(F.col("c_lo")))
         + F.bit_count(F.col("q_hi").bitwiseXOR(F.col("c_hi")))
@@ -1154,8 +1162,7 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("m", "code", sub.alias("c_sub"))
     )
     vs = (
-        e.select("vec_id", emb_dbl.alias("v"))
-        .repartition(32)
+        fan_out(e.select("vec_id", emb_dbl.alias("v")), "vec_id")
         .select("vec_id", "v", F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("m"))
         .select("vec_id", "m", sub.alias("v_sub"))
     )
@@ -1325,17 +1332,16 @@ def _lloyd(
     projection _KM_ASSIGN; the only shuffle per round is the
     posexplode centroid update, partial-aggregated map-side."""
     e = table(spark, sf_dir, "embeddings")
-    q = (
+    q = fan_out(
         e.select(
             "vec_id",
             F.transform(
                 "embedding",
                 lambda x: F.floor(x.cast("double") * 1e6 + F.lit(0.5)).cast("long"),
             ).alias("q"),
-        )
-        .repartition(8)
-        .localCheckpoint()  # loop-invariant input, materialized once
-    )
+        ),
+        "vec_id",
+    ).localCheckpoint()  # loop-invariant input, materialized once
     cent = q.filter(F.col("vec_id") < k).select(
         F.col("vec_id").alias("cluster"), F.col("q").alias("c")
     ).localCheckpoint()
@@ -1956,9 +1962,9 @@ def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") < _RRF_NQ).select(
         F.col("vec_id").alias("query_id"), emb_dbl.alias("q_emb")
     )
-    corpus = e.select(
-        F.col("vec_id").alias("neighbor_id"), emb_dbl.alias("c_emb")
-    ).repartition(32)
+    corpus = fan_out(
+        e.select(F.col("vec_id").alias("neighbor_id"), emb_dbl.alias("c_emb")), "neighbor_id"
+    )
     w_cos = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
     )
@@ -1985,11 +1991,14 @@ def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sig_lo").alias("q_lo"),
         F.col("sig_hi").alias("q_hi"),
     )
-    cs = sigs.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("sig_lo").alias("c_lo"),
-        F.col("sig_hi").alias("c_hi"),
-    ).repartition(32)
+    cs = fan_out(
+        sigs.select(
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("sig_lo").alias("c_lo"),
+            F.col("sig_hi").alias("c_hi"),
+        ),
+        "neighbor_id",
+    )
     ham = (
         F.bit_count(F.col("q_lo").bitwiseXOR(F.col("c_lo")))
         + F.bit_count(F.col("q_hi").bitwiseXOR(F.col("c_hi")))
@@ -2071,7 +2080,7 @@ def sim_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     head.
 
     Shape = batch k-NN with a label-inequality predicate: anchors are
-    a bounded broadcast slice, the corpus streams repartitioned, the
+    a bounded broadcast slice, the corpus streams (io.fan_out), the
     per-anchor rank is a WindowGroupLimit. Ranking follows the cosine
     family's rounded-rank convention (module docstring on _cos_arr:
     the cosine pipeline is transcendental-free, so ROUND(cos, 6) with
@@ -2091,12 +2100,15 @@ def sim_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("emb_a"),
         _norm(F.col("embedding")).alias("nrm_a"),
     )
-    c = e.select(
-        F.col("vec_id").alias("neg_id"),
-        F.col("label").cast("long").alias("neg_label"),
-        F.col("embedding").alias("emb_c"),
-        _norm(F.col("embedding")).alias("nrm_c"),
-    ).repartition(32)
+    c = fan_out(
+        e.select(
+            F.col("vec_id").alias("neg_id"),
+            F.col("label").cast("long").alias("neg_label"),
+            F.col("embedding").alias("emb_c"),
+            _norm(F.col("embedding")).alias("nrm_c"),
+        ),
+        "neg_id",
+    )
     cos = _dot(F.col("emb_a"), F.col("emb_c")) / (F.col("nrm_a") * F.col("nrm_c"))
     scored = (
         F.broadcast(a)
@@ -2288,12 +2300,15 @@ def sim_ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("eq"),
         _norm(F.col("embedding")).alias("nq"),
     )
-    c = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("cell"),
-        F.col("embedding").alias("ec"),
-        _norm(F.col("embedding")).alias("nc"),
-    ).repartition(32)
+    c = fan_out(
+        e.select(
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("label").alias("cell"),
+            F.col("embedding").alias("ec"),
+            _norm(F.col("embedding")).alias("nc"),
+        ),
+        "neighbor_id",
+    )
     cos = _dot(F.col("eq"), F.col("ec")) / (F.col("nq") * F.col("nc"))
     scored = (
         F.broadcast(q)

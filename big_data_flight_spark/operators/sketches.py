@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from big_data_flight_spark.io import table
+from big_data_flight_spark.io import fan_out, table
 from big_data_flight_spark.operators.text import JACCARD_PAIRS_ORACLE, shingles
 from big_data_flight_spark.registry import gate_query
 
@@ -123,7 +123,7 @@ def text_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic join; both produce the identical pair set, but the
     banded plan shuffles O(n) rows instead of materializing O(n²)
     comparisons — the 100 TB shape."""
-    docs = table(spark, sf_dir, "documents").repartition(32, "doc_id")
+    docs = fan_out(table(spark, sf_dir, "documents"), "doc_id")
     return simhash_pairs(docs)
 
 
@@ -221,7 +221,7 @@ def text_split_leakage_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     on doc_id, and only three 1-row aggregate frames cross-join at the
     end (broadcast, the sanctioned 1-row-state pattern). The oracle
     does the plain quadratic signature join — identical pair set."""
-    docs = table(spark, sf_dir, "documents").repartition(32, "doc_id")
+    docs = fan_out(table(spark, sf_dir, "documents"), "doc_id")
     pairs = simhash_pairs(docs)
     w = Window.partitionBy("lang").orderBy(
         F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
@@ -370,7 +370,7 @@ def text_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     final exact-Jaccard verify runs only on candidates — precision 1,
     recall ≈ 1-(1-j⁴)⁴ (≈ 0.88 at j=0.8, ≈ 0.99 at j=0.9 — r6 review
     corrected the overstated 0.8 figure)."""
-    docs = table(spark, sf_dir, "documents").repartition(32, "doc_id")
+    docs = fan_out(table(spark, sf_dir, "documents"), "doc_id")
     sh = shingles(docs, 3)
     cands = minhash_band_candidates(docs)
 
@@ -451,7 +451,7 @@ def text_minhash_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from big_data_flight_spark.operators.text import text_near_dedup_jaccard
 
-    docs = table(spark, sf_dir, "documents").repartition(32, "doc_id")
+    docs = fan_out(table(spark, sf_dir, "documents"), "doc_id")
     toks = docs.select("doc_id", F.split(F.lower(F.col("text")), " ").alias("tokens"))
     tf = HashingTF(inputCol="tokens", outputCol="features", numFeatures=1 << 18, binary=True)
     feat = tf.transform(toks)
@@ -1115,10 +1115,7 @@ def agg_histogram_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregate map-side. All-integer end to end — floor(price)
     is the one float touch, identical in both engines."""
     li = table(spark, sf_dir, "lineitem")
-    # repartition: the audit's broadcast cross join below inherits the
-    # single fixture split otherwise — one core would run the 4x
-    # conditional scan (the nested-loop-join rule; r6 review).
-    d = li.select(F.floor("l_extendedprice").cast("long").alias("d")).repartition(32)
+    d = fan_out(li.select(F.floor("l_extendedprice").cast("long").alias("d")), "d")
     hist = (
         d.select(F.expr(f"d DIV {HIST_BIN_W}").alias("b"))
         .groupBy("b")

@@ -465,9 +465,7 @@ def text_near_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs — stop-shingles create quadratic hot keys) and/or switch to
     the MinHash-LSH variant (sim_minhash_lsh) which bounds candidate
     pairs by banding."""
-    # single-file fixture → 1 input partition; fan out before the
-    # shingle explode so tokenization and the join build parallelize
-    docs = table(spark, sf_dir, "documents").repartition(32, "doc_id")
+    docs = fan_out(table(spark, sf_dir, "documents"), "doc_id")
     return near_dup_pairs(docs, threshold=0.5)
 
 
@@ -550,7 +548,7 @@ def text_near_dedup_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFram
     self-enforcing form for corpora nobody hand-sizes (VERDICT r11
     #4). Same join shape, same near_dup_pairs engine; the adaptive
     gate additionally emits (chosen_cap, median_df, p90_df)."""
-    docs = table(spark, sf_dir, "documents").repartition(32, "doc_id")
+    docs = fan_out(table(spark, sf_dir, "documents"), "doc_id")
     return near_dup_pairs(
         docs, threshold=0.5, max_doc_freq=_JACCARD_CAP, audit_dropped=True
     )
@@ -661,7 +659,7 @@ def text_near_dedup_jaccard_adaptive(spark: SparkSession, sf_dir: str) -> DataFr
     hand-chosen cap (and the measured saturation history);
     THIS gate = the computed cap. Both delegate to near_dup_pairs.
     """
-    docs = table(spark, sf_dir, "documents").repartition(32, "doc_id")
+    docs = fan_out(table(spark, sf_dir, "documents"), "doc_id")
     sh = shingles(docs, 3)
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     # compact df histogram: one row per DISTINCT df value
@@ -833,7 +831,7 @@ def text_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes: each round is one shuffle keyed by doc; caching the
     current labels avoids recomputing the edge derivation per round.
     in_cluster = doc touches ≥1 near-dup edge."""
-    docs = table(spark, sf_dir, "documents").repartition(32, "doc_id")
+    docs = fan_out(table(spark, sf_dir, "documents"), "doc_id")
     pairs = text_near_dedup_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     return _min_label_clusters(docs, pairs)
 
@@ -1012,7 +1010,7 @@ def text_dedup_clusters_lss(spark: SparkSession, sf_dir: str) -> DataFrame:
     list instead of O(diameter) label-propagation rounds over the
     full graph. The planted-topology equivalence test lives in
     tests/test_text_similarity.py."""
-    docs = table(spark, sf_dir, "documents").repartition(32, "doc_id")
+    docs = fan_out(table(spark, sf_dir, "documents"), "doc_id")
     pairs = text_near_dedup_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     return _lss_clusters(docs, pairs)
 
@@ -1142,7 +1140,7 @@ def _sliced_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     _SLICE_MOD. Docs with < 3 words have no shingles and are excluded
     by both engines (no rows to MIN over). One extra groupBy + semi
     join over the shingle relation — the slice itself is linear."""
-    docs = table(spark, sf_dir, "documents").repartition(32, "doc_id")
+    docs = fan_out(table(spark, sf_dir, "documents"), "doc_id")
     sh = shingles(docs, 3)
     slot = F.conv(F.substring(F.md5(F.col("shingle")), 1, 8), 16, 10).cast("long")
     slice_ids = (
@@ -1772,12 +1770,10 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ),
     ).otherwise(F.array().cast("array<string>"))
-    # repartition: the single-file fixture reads as ONE split, and the
-    # 8-gram explode is the heavy stage; checkpoint ONCE because both
-    # join sides consume this plan (r6 review — un-materialized, the
-    # tokenize+explode executed twice, single-threaded).
+    # checkpoint ONCE because both join sides consume this plan (r6
+    # review — un-materialized, the tokenize+explode executed twice).
     shingles = (
-        d.repartition(32, "doc_id")
+        fan_out(d, "doc_id")
         .select("doc_id", toks.alias("toks"))
         .select("doc_id", F.explode(grams).alias("shingle"))
         .localCheckpoint()
@@ -2085,9 +2081,9 @@ def text_near_dedup_editdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").select(
         "doc_id", "text", F.substring("text", 1, 32).alias("blk")
     )
-    a = d.select(
-        F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a"), "blk"
-    ).repartition(32, "blk")
+    a = fan_out(
+        d.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a"), "blk"), "blk"
+    )
     c = d.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b"), "blk")
     return (
         a.join(c, "blk")
@@ -2104,7 +2100,7 @@ def _positioned_dup_grams(spark: SparkSession, sf_dir: str):
     family's shingles()/near_dup_pairs): any change to the token
     filter, gram width, or the nd>=2 cross-doc threshold lands in both
     gates at once. Returns (base, sized, dup):
-      base  = (doc_id, w: array<token>)           — repartitioned
+      base  = (doc_id, w: array<token>)           — io.fan_out-widened
       sized = (doc_id, n_tokens, n_grams)          — counters
       dup   = (doc_id, s)                          — duplicated starts
     A gram is 'duplicated' when it occurs in >= 2 DISTINCT documents
@@ -2130,7 +2126,7 @@ def _positioned_dup_grams(spark: SparkSession, sf_dir: str):
     concat_ws safely ABOVE the Generate."""
     d = table(spark, sf_dir, "documents")
     toks = F.filter(F.split(F.lower(F.col("text")), " "), lambda t: t != "")
-    base = d.select("doc_id", toks.alias("w")).repartition(32, "doc_id")
+    base = fan_out(d.select("doc_id", toks.alias("w")), "doc_id")
     n = F.size("w")
     sized = base.select(
         "doc_id",
@@ -2429,7 +2425,7 @@ def text_substring_dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFram
     CLAUDE.md known-perf; pinned globally in plans/snapshot.py)."""
     d = table(spark, sf_dir, "documents")
     toks = F.filter(F.split(F.lower(F.col("text")), " "), lambda t: t != "")
-    base = d.select("doc_id", toks.alias("w")).repartition(32, "doc_id")
+    base = fan_out(d.select("doc_id", toks.alias("w")), "doc_id")
     # Integer paragraph count — (|w| + 31) div 32 — matches the
     # oracle's `//`; empty docs (none in any fixture generation, but
     # the guard is the shingles()/clean-gate convention) explode to
@@ -3441,7 +3437,7 @@ def text_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     standing index, computed once per epoch, broadcast as the stop
     set. 100 TB corpus + 1 TB daily batch = the only shape that
     doesn't re-pay the corpus shuffle daily."""
-    docs = table(spark, sf_dir, "documents").repartition(32, "doc_id")
+    docs = fan_out(table(spark, sf_dir, "documents"), "doc_id")
     is_batch = F.col("doc_id") % _INCR_BATCH_MOD == _INCR_BATCH_MOD - 1
     batch = docs.filter(is_batch)
     corpus = docs.filter(~is_batch)
@@ -3599,7 +3595,7 @@ def text_rag_context_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     the text_bm25 convention); query terms broadcast; the per-query
     rank and the pack are WindowGroupLimit-shaped windows over
     candidate rows only. Nothing quadratic, nothing per-row Python."""
-    d = table(spark, sf_dir, "documents").repartition(32, "doc_id")
+    d = fan_out(table(spark, sf_dir, "documents"), "doc_id")
     qdocs = d.filter(F.col("doc_id") < _RAG_N_QUERIES)
     corpus = d.filter(F.col("doc_id") >= _RAG_N_QUERIES)
 

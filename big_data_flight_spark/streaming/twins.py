@@ -23,7 +23,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_flight_spark.io import footer_schema, table, ts_guard
+from big_data_flight_spark.io import fan_out, footer_schema, table, ts_guard
 from big_data_flight_spark.operators.events import (
     EWMA_ORACLE,
     SESSION_WINDOW_NATIVE_ORACLE,
@@ -1300,7 +1300,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     is_batch = F.col("doc_id") % _INCR_BATCH_MOD == _INCR_BATCH_MOD - 1
 
-    docs_static = table(spark, sf_dir, "documents").repartition(32, "doc_id")
+    docs_static = fan_out(table(spark, sf_dir, "documents"), "doc_id")
     corpus = docs_static.filter(~is_batch)
     shc = shingles(corpus, 3).select(F.col("doc_id").alias("c_id"), "shingle")
 

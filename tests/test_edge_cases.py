@@ -3,6 +3,7 @@ empty groups, degenerate joins."""
 
 from __future__ import annotations
 
+import ast
 import contextlib
 import os
 import re
@@ -193,23 +194,64 @@ def test_fan_out_widens_one_row_group_cut_into_many_splits(spark):
     task: every split but the one holding the row group reads nothing.
     fan_out must count data-bearing units, not splits, widen with a
     hash exchange on the caller's key (no round-robin sort), and decide
-    without launching a Spark job."""
+    without launching a Spark job. Inputs: the flagship's lineitem,
+    the documents corpus the text gates widen, and sim_ann_lsh's
+    filtered embeddings slice (a nested-loop join's streamed side)."""
+    from pyspark.sql import functions as F
+
     from big_data_flight_spark.io import fan_out, table
     from tests.conftest import SF_SMOKE
 
     sc = spark.sparkContext
     cores = sc.defaultParallelism
     sf_dir = os.path.join(os.path.dirname(SF_SMOKE), "sf0.01")
-    with _sql_conf(spark, "spark.sql.files.openCostInBytes", "1024"):
-        li = table(spark, sf_dir, "lineitem")
-        assert li.rdd.getNumPartitions() == cores  # the split count looks wide
-        before = _last_job_id(sc)
-        widened = fan_out(li, "l_orderkey")
-        assert _last_job_id(sc) == before
-        assert widened is not li
-        plan = widened._jdf.queryExecution().executedPlan().toString()
-    assert re.search(rf"hashpartitioning\(l_orderkey#\d+L?, {cores}\)", plan), plan
-    assert "RoundRobinPartitioning" not in plan
+    inputs = [
+        (lambda: table(spark, sf_dir, "lineitem"), "l_orderkey"),
+        (lambda: table(spark, sf_dir, "documents"), "doc_id"),
+        (lambda: table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 500), "vec_id"),
+    ]
+    for frame, key in inputs:
+        with _sql_conf(spark, "spark.sql.files.openCostInBytes", "1024"):
+            df = frame()
+            assert len(df.inputFiles()) == 1
+            assert df.rdd.getNumPartitions() == cores, key  # the split count looks wide
+            before = _last_job_id(sc)
+            widened = fan_out(df, key)
+            assert _last_job_id(sc) == before, key
+            assert widened is not df, key
+            plan = widened._jdf.queryExecution().executedPlan().toString()
+        assert re.search(rf"hashpartitioning\({key}#\d+L?, {cores}\)", plan), plan
+        assert "RoundRobinPartitioning" not in plan, plan
+
+
+def test_no_literal_repartition_in_operators():
+    """io.fan_out is the one read-side widening rule: no operator or
+    streaming module may hard-code a width with ``.repartition(<int>``.
+    Write-side layout calls under sources/ shape files on disk and are
+    out of scope."""
+    from tests.conftest import REPO
+
+    pkg = os.path.join(REPO, "big_data_flight_spark")
+    hits = []
+    for sub in ("operators", "streaming"):
+        for root, _, files in os.walk(os.path.join(pkg, sub)):
+            for name in sorted(files):
+                if not name.endswith(".py"):
+                    continue
+                path = os.path.join(root, name)
+                with open(path) as fh:
+                    tree = ast.parse(fh.read(), path)
+                for node in ast.walk(tree):
+                    if (
+                        isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "repartition"
+                        and node.args
+                        and isinstance(node.args[0], ast.Constant)
+                        and type(node.args[0].value) is int
+                    ):
+                        hits.append(f"{os.path.relpath(path, pkg)}:{node.lineno}")
+    assert not hits, f"literal repartition widths (use io.fan_out): {hits}"
 
 
 def test_fan_out_noop_on_multifile_scan(spark, tmp_path):
