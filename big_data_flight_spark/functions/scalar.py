@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from big_data_flight_spark.io import table
-from big_data_flight_spark.registry import gate_query
+from big_data_flight_spark.registry import dsum, gate_query
 
 
 @gate_query(
@@ -671,9 +671,7 @@ def fn_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.countDistinct(F.col("k").cast("string")).alias("n_case_variants"),
-            F.sum(F.col("c_acctbal").cast("decimal(38,6)"))
-            .cast("double")
-            .alias("sum_bal"),
+            dsum("c_acctbal", "sum_bal"),
         )
         .select(
             F.lower(F.col("kc")).cast("string").alias("segment_lc"),

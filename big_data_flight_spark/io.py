@@ -170,9 +170,9 @@ def scan_bytes(df: DataFrame) -> int:
 
 def fan_out(df: DataFrame, key: str) -> DataFrame:
     """Hash-repartition a scan that holds too few data-bearing units to
-    fill the cores, so CPU-heavy downstream work (wide decimal partial
-    aggregates, per-row array building, the pairs of a nested-loop
-    join) runs on every core. This is the package's one read-side
+    fill the cores, so CPU-heavy downstream work (per-row array
+    building, tokenizing, the pairs of a nested-loop join) runs on
+    every core. This is the package's one read-side
     widening rule: operators call it rather than a literal
     ``repartition(n)``. A BNLJ inherits its streamed side's
     partitioning, so widen that side (the corpus against broadcast
@@ -195,13 +195,11 @@ def fan_out(df: DataFrame, key: str) -> DataFrame:
 
     Hash on a high-cardinality ``key``, not round-robin: Spark sorts
     every row before a round-robin exchange so that task retries
-    reproduce it; a hash exchange needs no sort. Flagship Q1 at sf0.1 on
-    local[4] (4-core box, 12 interleaved noop-sink runs each, median):
-    1.42 s unwidened (one task), 0.98 s round-robin, 0.82 s hashed on
-    ``l_orderkey``. Only worth it when per-row work dominates:
-    shuffle-all-values shapes (collect_list percentiles, count-distinct
-    expands) lose more to the added exchange than they gain — measured,
-    not assumed.
+    reproduce it; a hash exchange needs no sort. Only worth it when
+    per-row work dominates: shuffle-all-values shapes (collect_list
+    percentiles, count-distinct expands) and cheap partial aggregates
+    (the long-limb exact sums) lose more to the added exchange than they
+    gain — measured, not assumed.
     """
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism

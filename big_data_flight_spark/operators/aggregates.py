@@ -3,13 +3,10 @@
 All group-bys are plain ``df.groupBy().agg()``: Spark plans these as
 HashAggregateExec partial→final pairs (map-side combine before the
 shuffle), which is exactly the 100 TB-scale shape — the shuffle moves
-one row per (partition, group), not per input row. The only physical
-hint is the flagship's conditional ``fan_out`` (io.py): single-row-group
-fixture scans otherwise run the whole wide-decimal partial aggregate
-in ONE task; on a large or multi-file scan it is a no-op. AQE coalesces
-the post-shuffle side.
+one row per (partition, group), not per input row. AQE coalesces the
+post-shuffle side.
 
-Oracle parity: every double SUM/AVG uses the exact DECIMAL(38,6) path
+Oracle parity: every double SUM/AVG is the exact DECIMAL(38,6) sum
 (registry docstring, rule 1); integer sums are cast to BIGINT in the
 oracle; moments (stddev/var/corr) are recomputed from exact decimal
 sums instead of streaming-merge formulas so both engines produce
@@ -21,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from big_data_flight_spark.io import fan_out, scan_bytes, table
+from big_data_flight_spark.io import scan_bytes, table
 from big_data_flight_spark.registry import DAVG, DSUM, davg, dsum, gate_query
 
 # ---------------------------------------------------------------------------
@@ -53,21 +50,26 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     for (FIXTURES.md: lineitem carries exactly the Q1 column set).
     Plan shape: parquet scan with PushedFilters on l_shipdate →
     partial HashAggregate → single shuffle on the 2 group keys →
-    final HashAggregate. ``fan_out`` widens the single-row-group
-    fixture scan so the 8 DECIMAL(38,6) partial aggregates run on every
-    core; it is a no-op on large or multi-file inputs.
+    final HashAggregate. The exact sums are registry's long-limb kernel,
+    so the partial aggregate is cheap per row and runs on the scan's own
+    splits: no ``fan_out``. With the DECIMAL(38,6) cast-and-add per row
+    the single-row-group fixture scan paid for a widening exchange; with
+    long limbs that 8.5 MB exchange costs more than the extra cores save
+    (sf0.1, local[4], warm noop-sink median of 12: 274 ms widened
+    against 187 ms narrow, bit-identical rows).
     """
-    li = fan_out(table(spark, sf_dir, "lineitem"), "l_orderkey")
+    li = table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
+        .withColumns({"disc_price": disc_price, "charge": charge})
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             dsum("l_quantity", "sum_qty"),
             dsum("l_extendedprice", "sum_base_price"),
-            dsum(disc_price, "sum_disc_price"),
-            dsum(charge, "sum_charge"),
+            dsum("disc_price", "sum_disc_price"),
+            dsum("charge", "sum_charge"),
             davg("l_quantity", "avg_qty"),
             davg("l_extendedprice", "avg_price"),
             davg("l_discount", "avg_disc"),
@@ -288,8 +290,9 @@ def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two result-identical physical forms, picked by the size Spark reports
     for the lineitem scan against ``_PCTL_BOUNDED_BYTES`` (1 GiB):
 
-    - sorted (below it): ONE array_sort(collect_list) per group + rank
-      interpolation — measured 2.5× faster than the builtin
+    - sorted (below it): ONE sort_array(collect_list) per group — a
+      primitive ``double[]`` sort — + rank interpolation — measured
+      2.5× faster than the builtin
       percentile(col, array(...)) at bench SF. Its per-group buffer is
       DATA-sized (every group row lands in one executor array), which is
       exactly what does NOT survive 100 TB (§5).
@@ -332,9 +335,21 @@ def _pctl_interp(n, p: float, lo, hi):
 
 
 def _pctl_sorted(li: DataFrame) -> DataFrame:
-    """agg_percentile's fixture-scale form: one sorted array per group."""
-    pcts = li.groupBy("l_returnflag").agg(
-        F.array_sort(F.collect_list("l_extendedprice")).alias("a")
+    """agg_percentile's fixture-scale form: one sorted array per group.
+
+    ``sort_array`` of the non-null double array runs
+    ``java.util.Arrays.sort(double[])``, not a comparator over boxed
+    values (sf0.1, local[4], warm noop-sink median of 12: 156 ms against
+    262 ms for ``array_sort``).
+    ``Arrays.sort`` orders -0.0 before 0.0 where ``array_sort`` keeps
+    them in collection order, so ``+ 0.0`` folds -0.0 into 0.0 first,
+    as the bounded form's grouping by value does; NaN sorts last in
+    both."""
+    v = (F.col("l_extendedprice") + F.lit(0.0)).alias("l_extendedprice")
+    pcts = (
+        li.select("l_returnflag", v)
+        .groupBy("l_returnflag")
+        .agg(F.sort_array(F.collect_list("l_extendedprice")).alias("a"))
     )
 
     def interp(p: float):
@@ -507,17 +522,13 @@ def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
     q = F.col("l_quantity")
     p = F.col("l_extendedprice")
-
-    def s(expr, alias):  # exact decimal sum -> double
-        return F.sum(expr.cast("decimal(38,6)")).cast("double").alias(alias)
-
-    m = li.groupBy("l_returnflag").agg(
+    m = li.withColumns({"qq": q * q, "pp": p * p, "qp": q * p}).groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
-        s(q, "sx"),
-        s(q * q, "sxx"),
-        s(p, "sy"),
-        s(p * p, "syy"),
-        s(q * p, "sxy"),
+        dsum("l_quantity", "sx"),
+        dsum("qq", "sxx"),
+        dsum("l_extendedprice", "sy"),
+        dsum("pp", "syy"),
+        dsum("qp", "sxy"),
     )
     n, sx, sxx, sy, syy, sxy = (F.col(c) for c in ("n", "sx", "sxx", "sy", "syy", "sxy"))
     var_q = (sxx - sx * sx / n) / (n - 1)

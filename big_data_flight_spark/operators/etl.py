@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from big_data_flight_spark.io import table
-from big_data_flight_spark.registry import DSUM, dsum, gate_query
+from big_data_flight_spark.registry import DSUM, dsum, dsum_dec, gate_query
 
 
 @gate_query(
@@ -270,9 +270,7 @@ def etl_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exactly once, after the maintained total is assembled — summing
     # per-part doubles would reintroduce order dependence)
     def _dpart(frame: DataFrame) -> Column:
-        return F.sum(F.col("o_totalprice").cast("decimal(38,6)")).alias(
-            "sum_price"
-        )
+        return dsum_dec("o_totalprice", "sum_price")
 
     # the stored MV (one aggregation of the pre-delta snapshot)
     stored = base.groupBy(F.col("o_orderpriority").alias("priority")).agg(

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from big_data_flight_spark.io import table
-from big_data_flight_spark.registry import DSUM, dsum, gate_query
+from big_data_flight_spark.registry import DSUM, dsum, dsum_dec, gate_query
 
 _SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes
 
@@ -670,7 +670,7 @@ def evt_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.window("ts", "1 hour").alias("w"), "event_type"
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("value").cast("decimal(38,6)")).alias("sum_dec"),
+        dsum_dec("value", "sum_dec"),
         F.min("value").alias("min_value"),
         F.max("value").alias("max_value"),
     ).select(F.col("w.start").alias("hour_start"), "event_type", "n", "sum_dec",

@@ -1479,14 +1479,12 @@ def text_weighted_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         rate.alias("rate_permille"),
         slot.alias("slot"),
     )
-    return rated.groupBy("lang").agg(
+    kept = F.when(F.col("slot") < F.col("rate_permille"), F.col("n_chars")).otherwise(0)
+    return rated.withColumn("kept", kept).groupBy("lang").agg(
         F.max("rate_permille").cast("long").alias("rate_permille"),
         F.count(F.lit(1)).alias("n_total"),
         F.sum(F.when(F.col("slot") < F.col("rate_permille"), 1).otherwise(0)).alias("n_kept"),
-        dsum(
-            F.when(F.col("slot") < F.col("rate_permille"), F.col("n_chars")).otherwise(0),
-            "kept_chars",
-        ),
+        dsum("kept", "kept_chars"),
     )
 
 

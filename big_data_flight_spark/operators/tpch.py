@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from big_data_flight_spark.io import table
-from big_data_flight_spark.registry import DSUM, davg, dsum, gate_query
+from big_data_flight_spark.registry import DSUM, davg, dsum, exact_sum_sql, gate_query
 
 
 @gate_query(
@@ -98,8 +98,8 @@ def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
     )
-    return joined.groupBy("n_name").agg(
-        dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue")
+    return joined.withColumn("rev", F.col("l_extendedprice") * (1 - F.col("l_discount"))).groupBy("n_name").agg(
+        dsum("rev", "revenue")
     )
 
 
@@ -125,8 +125,8 @@ def tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
         & F.col("l_discount").between(0.04, 0.06)
         & (F.col("l_quantity") < 24)
-    ).agg(
-        dsum(F.col("l_extendedprice") * F.col("l_discount"), "revenue"),
+    ).withColumn("rev", F.col("l_extendedprice") * F.col("l_discount")).agg(
+        dsum("rev", "revenue"),
         F.count(F.lit(1)).alias("n"),
     )
 
@@ -166,9 +166,10 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
     )
     return (
-        joined.groupBy("c_custkey", "c_name", "n_name")
+        joined.withColumn("rev", F.col("l_extendedprice") * (1 - F.col("l_discount")))
+        .groupBy("c_custkey", "c_name", "n_name")
         .agg(
-            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"),
+            dsum("rev", "revenue"),
             F.max("c_acctbal").alias("acctbal"),
         )
         .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
@@ -202,11 +203,10 @@ def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = table(spark, sf_dir, "part")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     promo = F.when(F.col("p_type").like("PROMO%"), rev).otherwise(F.lit(0.0))
-    j = li.join(p, li.l_partkey == p.p_partkey)
-    ratio = (
-        100.0
-        * F.sum(promo.cast("decimal(38,6)")).cast("double")
-        / F.sum(rev.cast("decimal(38,6)")).cast("double")
+    j = li.join(p, li.l_partkey == p.p_partkey).withColumns({"rev": rev, "promo": promo})
+    ratio = F.expr(
+        f"100.0D * CAST({exact_sum_sql('promo')} AS DOUBLE)"
+        f" / CAST({exact_sum_sql('rev')} AS DOUBLE)"
     )
     # floor-form display rounding (registry rule: ROUND(.,6) on an
     # unconstrained double is engine-divergent at half boundaries —
@@ -429,9 +429,9 @@ def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
             | ((F.col("supp_nation") == "NATION_7") & (F.col("cust_nation") == "NATION_3"))
         )
     )
-    return joined.groupBy(
+    return joined.withColumn("rev", F.col("l_extendedprice") * (1 - F.col("l_discount"))).groupBy(
         "supp_nation", "cust_nation", F.year("l_shipdate").cast("long").alias("yr")
-    ).agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"))
+    ).agg(dsum("rev", "revenue"))
 
 
 @gate_query(
@@ -491,10 +491,17 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(r), F.col("n1_region") == F.col("r_regionkey"))
         .join(F.broadcast(n2), F.col("s_nationkey") == F.col("n2_key"))
     )
-    vol = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(38,6)")
-    nat5 = F.when(F.col("supp_nation") == "NATION_5", vol).otherwise(F.lit(0).cast("decimal(38,6)"))
-    return joined.groupBy(F.year("o_orderdate").cast("long").alias("yr")).agg(
-        (F.sum(nat5).cast("double") / F.sum(vol).cast("double")).alias("mkt_share")
+    vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    nat5 = F.when(F.col("supp_nation") == "NATION_5", vol).otherwise(F.lit(0.0))
+    return (
+        joined.withColumns({"vol": vol, "nat5": nat5})
+        .groupBy(F.year("o_orderdate").cast("long").alias("yr"))
+        .agg(
+            F.expr(
+                f"CAST({exact_sum_sql('nat5')} AS DOUBLE) / CAST({exact_sum_sql('vol')} AS DOUBLE)"
+                " AS mkt_share"
+            )
+        )
     )
 
 
@@ -593,8 +600,8 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     )
-    rev = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "total_revenue")
+    rev = li.withColumn("rev", F.col("l_extendedprice") * (1 - F.col("l_discount"))).groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
+        dsum("rev", "total_revenue")
     )
     mx = rev.agg(F.max("total_revenue").alias("mx"))
     s = table(spark, sf_dir, "supplier")
@@ -649,8 +656,8 @@ def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_returnflag") == "N")
         )
     )
-    return joined.filter(branch).agg(
-        dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue")
+    return joined.filter(branch).withColumn("rev", F.col("l_extendedprice") * (1 - F.col("l_discount"))).agg(
+        dsum("rev", "revenue")
     )
 
 
@@ -942,7 +949,7 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(s, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy(F.col("l_partkey").alias("pk"))
-        .agg(F.sum(F.col("l_extendedprice").cast("decimal(38,6)")).cast("double").alias("value"))
+        .agg(dsum("l_extendedprice", "value"))
     )
     tot = val.agg(
         F.aggregate(

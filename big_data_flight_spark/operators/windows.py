@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from big_data_flight_spark.io import table
-from big_data_flight_spark.registry import gate_query
+from big_data_flight_spark.registry import dsum, gate_query
 
 
 @gate_query(
@@ -259,7 +259,7 @@ def win_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("n_name")
-        .agg(F.sum(F.col("o_totalprice").cast("decimal(38,6)")).cast("double").alias("revenue"))
+        .agg(dsum("o_totalprice", "revenue"))
     )
     w_all = Window.partitionBy()
     return nat.select(

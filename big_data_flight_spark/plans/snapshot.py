@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -729,6 +730,24 @@ def plan_text(df) -> str:
     return buf.getvalue()
 
 
+# Numbers a plan's text takes from the session rather than from the
+# query: expression ids (``l_orderkey#1234L``), ``plan_id=``, RDD ids and
+# the per-process scratch directory (``.tmp/s<pid>``).
+_SESSION_NUMBERS = (r"(#)(\d+)", r"(plan_id=)(\d+)", r"(RDD\[)(\d+)", r"(\.tmp/s)(\d+)")
+
+
+def stable_text(txt: str) -> str:
+    """``txt`` with each session-assigned number renumbered 1, 2, ... in
+    order of first appearance, so that PLANS.md diffs only where a plan
+    changed. Property checks read the raw text."""
+    for pattern in _SESSION_NUMBERS:
+        ids: dict[str, int] = {}
+        txt = re.sub(
+            pattern, lambda m: f"{m.group(1)}{ids.setdefault(m.group(2), len(ids) + 1)}", txt
+        )
+    return txt
+
+
 def main() -> int:
     from big_data_flight_spark.registry import _REGISTRY, _load_all_operator_modules
     from big_data_flight_spark.session import get_session
@@ -775,7 +794,7 @@ def main() -> int:
             out.append("Required plan properties: " + ", ".join(checks))
         out.append("")
         out.append("```")
-        out.append(txt.strip())
+        out.append(stable_text(txt).strip())
         out.append("```")
         out.append("")
 

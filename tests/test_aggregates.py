@@ -38,6 +38,103 @@ def test_dsum_is_exact(spark):
     assert out["s"] == pytest.approx(0.6, abs=1e-12)
 
 
+# ---------------------------------------------------------------------------
+# registry.exact_sum_sql: the long-limb kernel against the decimal cast it
+# replaces, to the bit
+# ---------------------------------------------------------------------------
+
+def _cast_sum_vs_kernel(spark, rows, schema="g int, x double"):
+    """Per group: the cast form's decimal sum, double sum and average
+    beside ``dsum_dec``, ``dsum`` and ``davg``."""
+    from pyspark.sql import functions as F
+
+    from big_data_flight_spark.registry import davg, dsum, dsum_dec
+
+    ref = F.sum(F.col("x").cast("decimal(38,6)"))
+    out = (
+        spark.createDataFrame(rows, schema)
+        .groupBy("g")
+        .agg(
+            ref.alias("ref"),
+            dsum_dec("x", "dec"),
+            ref.cast("double").alias("ref_d"),
+            dsum("x", "d"),
+            (ref.cast("double") / F.count("x")).alias("ref_avg"),
+            davg("x", "avg"),
+        )
+        .collect()
+    )
+    return {r["g"]: r for r in out}
+
+
+def _same(r) -> None:
+    assert r["dec"] == r["ref"] and str(r["dec"]) == str(r["ref"]), r
+    for a, b in (("d", "ref_d"), ("avg", "ref_avg")):
+        assert (r[a] is None) == (r[b] is None), r
+        if r[a] is not None:
+            assert _bits([r[a]]) == _bits([r[b]]), (a, r)
+
+
+def test_exact_sum_kernel_matches_decimal_cast_bits(spark):
+    """Half-ties of both signs (the cast rounds HALF_UP the decimal that
+    Double.toString reads), values one ulp either side of x·10^6 = 2^52,
+    of 2^50 (where the tie margin reaches 0.5), of 1e9 and of 9.2e12,
+    NaN/±Inf/NULL rows (cast to NULL, skipped) and an all-NULL group;
+    each row is also its own group, so every per-row u is pinned."""
+    ties = [5e-7, -5e-7, -2.5e-6, 2.5e-6, 0.0000025, 1.2345675, -1.2345675,
+            12.3456785, -98765.4321235, 0.0000015, 4503.5999995]
+    edges = []
+    for b in (2.0**52 / 1e6, 2.0**50 / 1e6, 1e9, 9.2e12):
+        for v in (math.nextafter(b, 0.0), b, math.nextafter(b, math.inf)):
+            edges += [v, -v]
+    rng = random.Random(5)
+    spread = [rng.uniform(-1, 1) * 10.0 ** rng.randint(-9, 12) for _ in range(400)]
+    special = [float("nan"), float("inf"), -float("inf"), None, 1.5, -0.0]
+    groups = {0: ties, 1: edges, 2: spread, 3: special, 4: [None, None]}
+    rows = [(g, v) for g, vs in groups.items() for v in vs]
+    rows += [(100 + i, v) for i, (_, v) in enumerate(rows)]
+    got = _cast_sum_vs_kernel(spark, rows)
+    assert set(got) == {g for g, _ in rows}
+    for r in got.values():
+        _same(r)
+    assert got[3]["dec"] == pytest.approx(1.5) and got[4]["dec"] is None
+
+
+def test_exact_sum_kernel_past_2_53_micro_units_rounds_once(spark):
+    """A sum of n = 502025577539271952 micro-units: n/10^6 computed as
+    double(n) / 1e6 rounds twice and misses the correctly rounded double
+    by one ulp. The kernel's CAST of its DECIMAL(38,6) must give the
+    correctly rounded value, as the cast form does."""
+    from fractions import Fraction
+
+    from pyspark.sql import functions as F
+
+    from big_data_flight_spark.registry import dsum
+
+    n = 502025577539271952
+    exact = float(Fraction(n, 10**6))
+    assert n > 2**53 and float(n) / 1e6 != exact  # the case bites
+    df = spark.range(502025).select(F.lit(1000000.0).alias("x")).union(
+        spark.createDataFrame([(577539.271952,)], "x double")
+    )
+    (row,) = df.agg(
+        dsum("x", "s"), F.sum(F.col("x").cast("decimal(38,6)")).cast("double").alias("ref")
+    ).collect()
+    assert _bits([row["s"]]) == _bits([row["ref"]]) == _bits([exact])
+
+
+def test_exact_sum_kernel_empty_input_and_overflow(spark):
+    """An empty input sums to NULL; |x| past the long range of
+    micro-units (about 9.2e12) raises, never a silent wrong sum."""
+    from big_data_flight_spark.registry import dsum
+
+    empty = spark.createDataFrame([], "x double")
+    (row,) = empty.agg(dsum("x", "s")).collect()
+    assert row["s"] is None
+    with pytest.raises(Exception, match="CAST_OVERFLOW|overflow"):
+        spark.createDataFrame([(1.0,), (9.3e12,)], "x double").agg(dsum("x", "s")).collect()
+
+
 def _oracle_parity(spark, duck, name):
     from tools.compare import compare_one
 
@@ -93,6 +190,38 @@ def test_pctl_bounded_bit_identical_to_sorted(spark):
     assert set(a) == set(b)
     for g in a:
         assert _bits(a[g]) == _bits(b[g]), (g, a[g], b[g])
+
+
+def test_pctl_sorted_signed_zeros_and_nan(spark):
+    """The sorted form's primitive sort orders -0.0 before 0.0 where
+    ``array_sort`` kept collection order; it folds -0.0 into 0.0 first,
+    so a percentile that lands on a zero reads 0.0, as the bounded
+    form's grouping by value gives. NaN sorts last in both sorts, as in
+    the Python reference (the bounded form buckets NaN as cent 0, so it
+    is compared on the zeros group only)."""
+    groups = {
+        "Z": [-0.0, -0.0, -0.0, 0.0, 7.0],
+        "N": [2.0, float("nan"), 1.0, 3.0],
+    }
+    li = spark.createDataFrame(
+        [(g, v) for g, vs in groups.items() for v in vs],
+        "l_returnflag string, l_extendedprice double",
+    )
+
+    def rows(form):
+        return {
+            r["l_returnflag"]: (r["p50_price"], r["p90_price"], r["p99_price"])
+            for r in getattr(agg, form)(li).collect()
+        }
+
+    got = rows("_pctl_sorted")
+    zeros = [v + 0.0 for v in groups["Z"]]
+    want = tuple(_quantile_cont(zeros, p) for p in (0.5, 0.9, 0.99))
+    assert _bits(got["Z"]) == _bits(want) and _bits(want[:1]) == _bits([0.0])
+    assert _bits(got["Z"]) == _bits(rows("_pctl_bounded")["Z"])
+    nan_last = sorted(groups["N"], key=lambda v: (math.isnan(v), v))
+    want = tuple(_quantile_cont(nan_last, p) for p in (0.5, 0.9, 0.99))
+    assert _bits(got["N"]) == _bits(want), (got["N"], want)
 
 
 def test_pctl_bounded_plan_has_no_data_sized_collect(spark):

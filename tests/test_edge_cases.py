@@ -254,6 +254,52 @@ def test_no_literal_repartition_in_operators():
     assert not hits, f"literal repartition widths (use io.fan_out): {hits}"
 
 
+def test_no_inline_decimal_sum_outside_registry():
+    """registry.exact_sum_sql is the one exact-sum kernel: no module may
+    sum ``.cast("decimal(38,6)")`` in a ``F.sum(`` of its own. The two
+    window sums in windows.py (win_running, win_moving) stay: the kernel
+    is an aggregate expression, and a window form would be a second
+    kernel."""
+    from tests.conftest import REPO
+
+    def is_decimal_cast(node):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "cast"
+            and node.args
+            and isinstance(node.args[0], ast.Constant)
+            and str(node.args[0].value).replace(" ", "").lower() == "decimal(38,6)"
+        )
+
+    pkg = os.path.join(REPO, "big_data_flight_spark")
+    window_sums = {"win_running", "win_moving"}
+    hits = []
+    for root, _, files in os.walk(pkg):
+        for name in sorted(files):
+            path = os.path.join(root, name)
+            rel = os.path.relpath(path, pkg)
+            if not name.endswith(".py") or rel == "registry.py":
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            skip = set()
+            if rel == os.path.join("operators", "windows.py"):
+                for fn in tree.body:
+                    if isinstance(fn, ast.FunctionDef) and fn.name in window_sums:
+                        skip |= {id(n) for n in ast.walk(fn)}
+            for node in ast.walk(tree):
+                if (
+                    id(node) not in skip
+                    and isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "sum"
+                    and any(is_decimal_cast(a) for arg in node.args for a in ast.walk(arg))
+                ):
+                    hits.append(f"{rel}:{node.lineno}")
+    assert not hits, f"inline decimal sums (use registry.dsum): {hits}"
+
+
 def test_fan_out_noop_on_multifile_scan(spark, tmp_path):
     """The cluster-scan case, not just a repartitioned frame: a real
     multi-file parquet source already arrives in >= cores/2 splits, so

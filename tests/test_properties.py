@@ -100,15 +100,25 @@ def test_dedup_first_rule(spark, rows):
 )
 @settings(**SETTINGS)
 def test_dsum_matches_python_exact(spark, vals):
-    """Exact decimal sum equals Python's exact decimal arithmetic
-    (HALF_UP quantization per value, like Spark's double→decimal cast),
+    """The exact sum equals, to the bit, Spark's own
+    ``SUM(CAST(x AS DECIMAL(38,6)))`` and its cast to double, and that
+    sum agrees with Python's exact decimal arithmetic (HALF_UP
+    quantization per value, like Spark's double→decimal cast),
     regardless of value order."""
+    import struct
     from decimal import ROUND_HALF_UP, Decimal
 
-    from big_data_flight_spark.registry import dsum
+    from pyspark.sql import functions as F
+
+    from big_data_flight_spark.registry import dsum, dsum_dec
 
     df = spark.createDataFrame([(float(v),) for v in vals], "x double")
-    (row,) = df.agg(dsum("x", "s")).collect()
+    ref = F.sum(F.col("x").cast("decimal(38,6)"))
+    (row,) = df.agg(
+        dsum("x", "s"), dsum_dec("x", "sd"), ref.alias("ref"), ref.cast("double").alias("ref_d")
+    ).collect()
+    assert row["sd"] == row["ref"]
+    assert struct.pack(">d", row["s"]) == struct.pack(">d", row["ref_d"])
     q = Decimal("0.000001")
     exact = sum(Decimal(float(v)).quantize(q, rounding=ROUND_HALF_UP) for v in vals)
     assert abs(row["s"] - float(exact)) < 1e-9

@@ -270,10 +270,11 @@ def test_sql_udf_matches_plain_dataframe_form(spark):
     )
     want = {
         r["l_linestatus"]: (r["n_lines"], r["sum_net"])
-        for r in li.groupBy("l_linestatus")
+        for r in li.withColumn("net", net)
+        .groupBy("l_linestatus")
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
-            dsum(net, "sum_net"),
+            dsum("net", "sum_net"),
         )
         .collect()
     }
