@@ -371,8 +371,10 @@ def _pctl_bounded(li: DataFrame) -> DataFrame:
     it selects the 1-based ranks k_lo = floor(pos)+1 and
     k_hi = least(k_lo+1, n) (capped only when pos == floor(pos), where
     the interpolation never reads hi), then interpolates the selected raw
-    doubles."""
-    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
+    doubles. NaN takes the top bucket, so it sorts last as in the sorted
+    form and DuckDB."""
+    v = F.col("l_extendedprice")
+    cents = F.when(F.isnan(v), F.lit(2**63 - 1)).otherwise(F.floor(v * 100 + F.lit(0.5)))
     counts = (
         li.where(F.col("l_extendedprice").isNotNull())
         .groupBy("l_returnflag", "l_extendedprice")

@@ -1,11 +1,17 @@
-"""Plan inspection & regression snapshots — SURVEY.md §3.4.
+"""Plan inspection & regression checks — SURVEY.md §3.4.
 
-``python -m big_data_flight_spark.plans.snapshot`` regenerates
-PLANS.md at the repo root: the formatted physical plan of each
-representative gate query, plus automated assertions about the
-properties that matter at 100 TB (filter pushdown reached the scan,
-projection pruned the schema, dimension joins broadcast, window limit
-pushed down). Reviewing the diff of PLANS.md after an operator change
+The one place that turns a gate into plan text (``gate_plan``) and
+checks it (``check``): each SNAPSHOT gate's required properties (filter
+pushdown reached the scan, projection pruned the schema, dimension
+joins broadcast, window limit pushed down, ...) plus the rules every
+gate keeps (no clone needle, no CartesianProduct, no filter above an
+unpushed scan). ``tests/test_plans.py`` runs ``check`` live on every
+registered gate.
+
+``python -m big_data_flight_spark.plans.snapshot`` regenerates PLANS.md
+at the repo root (the formatted physical plan of each SNAPSHOT gate,
+fixtures from ``SPARK_GRAFT_SF_DIR``, default sf0.01) and exits 1 on any
+check failure. Reviewing the diff of PLANS.md after an operator change
 is the plan-regression check."""
 
 from __future__ import annotations
@@ -23,7 +29,11 @@ sys.path.insert(0, REPO)
 SNAPSHOT = {
     "agg_groupby": ["PushedFilters", "HashAggregate"],
     "project_select": ["ReadSchema"],
-    "join_broadcast": ["BroadcastHashJoin"],
+    # Projection pruning: the nation scan reads only the columns the
+    # query selects.
+    "scan_parquet": ["ReadSchema", "n_nationkey", "!n_comment"],
+    # A dimension join broadcasts; a sort-merge join would shuffle the fact.
+    "join_broadcast": ["BroadcastHashJoin", "!SortMergeJoin"],
     "join_inner_equi": [],
     "tpch_q5": ["BroadcastHashJoin"],
     "tpch_q6": ["PushedFilters"],
@@ -42,7 +52,8 @@ SNAPSHOT = {
     "tpch_q2": ["WindowGroupLimit", "BroadcastHashJoin"],
     "win_topk_per_group": ["WindowGroupLimit"],
     "limit_topk": ["TakeOrderedAndProject"],
-    "filter_pred": ["PushedFilters"],
+    # The predicate reaches the parquet reader as pushed filters.
+    "filter_pred": ["PushedFilters", "IsNotNull(l_quantity)|GreaterThanOrEqual"],
     "text_near_dedup_jaccard": [],
     "sim_cosine_pairs": [],
     # r2 additions: the LSS connected-components result plan (its
@@ -168,7 +179,7 @@ SNAPSHOT = {
         # r10 InferFiltersFromGenerate regression pin: the inferred
         # size>0 filter must never re-inline the tokenization into
         # per-element access (the 33x clone; see _positioned_dup_grams
-        # docstring). Also asserted GLOBALLY over every plan in main().
+        # docstring). check() applies the same needle to every gate.
         "!element_at(filter(split",
     ],
     # Convergence-gated PageRank: the early-stopped loop must leave the
@@ -269,13 +280,14 @@ SNAPSHOT = {
     # MAD anomaly: one day-bucket shuffle into the collect aggregate,
     # medians picked expression-side — no second shuffle, no window.
     "evt_anomaly_mad": ["HashAggregate", "=1:events.parquet", "!Window"],
-    # Link prediction: candidate pairs MUST come from the supplier
-    # inverted-index equi-join (hot keys capped) — never a
-    # customer x customer nested loop; bounded output via top-k sort.
+    # Link prediction: pair generation is the customer-keyed
+    # inverted-index equi-join (hot keys capped); degree tables
+    # broadcast back; never a supplier x supplier loop; bounded output
+    # via top-k sort.
     "graph_common_neighbors": [
         "SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin",
-        "!BroadcastNestedLoopJoin",
-        "HashAggregate",
+        "!CartesianProduct",
+        "BroadcastHashJoin",
         "TakeOrderedAndProject",
     ],
     # Bigram LM: pair counting is the hash aggregate; the per-w1
@@ -519,15 +531,6 @@ SNAPSHOT = {
         "BroadcastNestedLoopJoin",
         "WindowGroupLimit",
     ],
-    # r8. De-vacuified common-neighbors: pair generation is the
-    # customer-keyed inverted-index equi-join; degree tables broadcast
-    # back; never a supplier x supplier loop.
-    "graph_common_neighbors": [
-        "SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin",
-        "!CartesianProduct",
-        "BroadcastHashJoin",
-        "TakeOrderedAndProject",
-    ],
     # r8. As-of with tolerance: stays the merge-pass single-scan form —
     # one events scan, a window, NO join of any kind.
     "join_asof_tolerance": [
@@ -730,6 +733,101 @@ def plan_text(df) -> str:
     return buf.getvalue()
 
 
+# The r10 InferFiltersFromGenerate clone (33x on the substring base, 2x
+# on shingles): per-element access into a re-inlined tokenization, the
+# signature of an inferred/pushed filter (or collapsed projection) that
+# re-evaluates split()/filter(split()) inside every element_at.
+_CLONE_NEEDLES = ("element_at(split(", "element_at(filter(split")
+
+_TREE_LINE = re.compile(r"^[\s:+|*-]*?([A-Za-z][A-Za-z0-9 ._]*?)\s*\((\d+)\)\s*$")
+
+
+def _parse_tree(plan: str) -> list[tuple[int, str, int]]:
+    """(depth, opname, id) for each tree line of a formatted plan. Depth
+    is the column where the operator name starts: the tree is drawn with
+    ':-'/'+-' branches, so it grows with nesting."""
+    out = []
+    for line in plan.splitlines():
+        if line.startswith("=="):
+            continue
+        if not line.strip():
+            break  # a blank line ends the tree section
+        m = _TREE_LINE.match(line)
+        if m:
+            out.append((len(line) - len(line.lstrip(" :+|-*")), m.group(1), int(m.group(2))))
+    return out
+
+
+def _detail_block(plan: str, node_id: int) -> str:
+    """The '(n) OpName ...' detail section for one node id."""
+    m = re.search(rf"^\({node_id}\) .*?(?=^\(\d+\) |\Z)", plan, re.M | re.S)
+    return m.group(0) if m else ""
+
+
+def _unpushed_filter(plan: str) -> bool:
+    """A Filter directly above a parquet scan of more than one column
+    whose PushedFilters is empty (ColumnarToRow/InputAdapter between
+    them are transparent): the predicate never reached the reader."""
+    tree = _parse_tree(plan)
+    for i, (depth, name, nid) in enumerate(tree):
+        if not name.startswith("Scan parquet"):
+            continue
+        detail = _detail_block(plan, nid)
+        schema = re.search(r"ReadSchema: struct<([^\n]*)", detail)
+        if "PushedFilters: []" not in detail or not schema or schema.group(1).count(":") <= 1:
+            continue
+        # The nearest earlier line that is shallower is the parent.
+        for d2, n2, _ in reversed(tree[:i]):
+            if d2 >= depth:
+                continue
+            depth = d2
+            if not n2.startswith(("ColumnarToRow", "InputAdapter")):
+                if n2.startswith("Filter"):
+                    return True
+                break
+    return False
+
+
+def holds(prop: str, txt: str) -> bool:
+    """One SNAPSHOT property against a plan's text. "A|B" = any of them
+    appears (any equi-join strategy is fine, as long as it isn't a
+    nested loop); "!X" = X must NOT appear (e.g. no Exchange in a pure
+    projection); "=N:X" = X appears EXACTLY N times (e.g. exactly one
+    lineitem scan in the one-scan Q21); otherwise X appears."""
+    if prop.startswith("!"):
+        return prop[1:] not in txt
+    if prop.startswith("=") and ":" in prop:
+        n, _, needle = prop[1:].partition(":")
+        return txt.count(needle) == int(n)
+    return any(alt in txt for alt in prop.split("|"))
+
+
+def check(name: str, txt: str) -> list[str]:
+    """Failures of gate ``name``'s formatted plan ``txt``: its SNAPSHOT
+    properties, then the rules every gate keeps: no clone needle, no
+    CartesianProduct, no filter left above an unpushed multi-column
+    scan. Empty = the plan passes."""
+    fails = [f"`{p}`" for p in SNAPSHOT.get(name, ()) if not holds(p, txt)]
+    fails += [f"clone `{n}`" for n in _CLONE_NEEDLES if n in txt]
+    if "CartesianProduct" in txt:
+        fails.append("CartesianProduct")
+    if _unpushed_filter(txt):
+        fails.append("NOPUSHDOWN: filter above a scan with empty PushedFilters")
+    return fails
+
+
+def gate_plan(spark, name: str, sf_dir: str) -> tuple[str, list[str]]:
+    """Build registered gate ``name`` and return (plan text, check()
+    failures); a builder or explain error is the one failure."""
+    from big_data_flight_spark.registry import _REGISTRY
+
+    try:
+        txt = plan_text(_REGISTRY[name].builder(spark, sf_dir))
+    except Exception as exc:  # noqa: BLE001 — reported as the gate's failure
+        return "", [f"build error: {type(exc).__name__}: {str(exc)[:300]}"]
+    return txt, check(name, txt)
+
+
 # Numbers a plan's text takes from the session rather than from the
 # query: expression ids (``l_orderkey#1234L``), ``plan_id=``, RDD ids and
 # the per-process scratch directory (``.tmp/s<pid>``).
@@ -749,70 +847,45 @@ def stable_text(txt: str) -> str:
 
 
 def main() -> int:
-    from big_data_flight_spark.registry import _REGISTRY, _load_all_operator_modules
+    from big_data_flight_spark.registry import _load_all_operator_modules
     from big_data_flight_spark.session import get_session
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     _load_all_operator_modules()
     spark = get_session("plans", cores=8)
+    shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    cores = spark.sparkContext.defaultParallelism
 
     out = [
         "# PLANS — physical-plan snapshots (regenerate: "
         "`python -m big_data_flight_spark.plans.snapshot`)",
         "",
-        f"Captured at {sf_dir} with AQE enabled (plans show the pre-AQE "
+        f"Captured at {sf_dir}. Session, read back: "
+        f"spark.sql.shuffle.partitions={shuffle} (the width of each "
+        f"hashpartitioning Spark sizes; `io.fan_out` exchanges take the {cores} "
+        f"cores), spark.sql.adaptive.enabled={aqe} (plans show the pre-AQE "
         "physical strategy; AQE may further convert joins / coalesce "
-        "partitions at runtime). Review the diff of this file whenever an "
-        "operator changes — it is the plan-regression gate.",
+        "partitions at runtime). Review the diff of this file "
+        "whenever an operator changes; tests/test_plans.py runs the same "
+        "checks live on every gate.",
         "",
     ]
     failures = []
-    all_plans: dict[str, str] = {}
     for name, props in SNAPSHOT.items():
-        q = _REGISTRY[name]
-        txt = plan_text(q.builder(spark, sf_dir))
-        all_plans[name] = txt
-        checks = []
-        for p in props:
-            # Property micro-syntax: "A|B" = any-of (any equi-join
-            # strategy is fine, as long as it isn't a nested loop);
-            # "!X" = X must NOT appear (e.g. no Exchange in a pure
-            # projection); "=N:X" = X must appear EXACTLY N times
-            # (e.g. exactly one lineitem scan in the one-scan Q21).
-            if p.startswith("!"):
-                ok = p[1:] not in txt
-            elif p.startswith("=") and ":" in p:
-                n, _, needle = p[1:].partition(":")
-                ok = txt.count(needle) == int(n)
-            else:
-                ok = any(alt in txt for alt in p.split("|"))
-            checks.append(f"{'✅' if ok else '❌'} `{p}`")
-            if not ok:
-                failures.append((name, p))
+        txt, fails = gate_plan(spark, name, sf_dir)
+        failures += [(name, f) for f in fails]
         out.append(f"## {name}")
-        if checks:
-            out.append("Required plan properties: " + ", ".join(checks))
-        out.append("")
-        out.append("```")
-        out.append(stable_text(txt).strip())
-        out.append("```")
-        out.append("")
+        if props:
+            marks = [f"{'✅' if holds(p, txt) else '❌'} `{p}`" for p in props]
+            out.append("Required plan properties: " + ", ".join(marks))
+        out += ["", "```", stable_text(txt).strip(), "```", ""]
 
     with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))
     print(f"wrote PLANS.md ({len(SNAPSHOT)} plans)")
-    # GLOBAL r10 pin (the InferFiltersFromGenerate clone, 33x on the
-    # substring base, 2x on shingles): no snapshotted plan may contain
-    # per-element access into a re-inlined tokenization — the signature
-    # of an inferred/pushed filter (or collapsed projection) that
-    # re-evaluates split()/filter(split()) inside every element_at.
-    # Catches the pathology on any FUTURE gate, not just the fixed two.
-    for needle in ("element_at(split(", "element_at(filter(split"):
-        bad = [n for n, t in all_plans.items() if needle in t]
-        for n in bad:
-            failures.append((n, f"!{needle} [global clone pin]"))
-    for name, p in failures:
-        print(f"MISSING PLAN PROPERTY: {name}: {p}", file=sys.stderr)
+    for name, f in failures:
+        print(f"PLAN CHECK FAILED: {name}: {f}", file=sys.stderr)
     return 1 if failures else 0
 
 

@@ -196,12 +196,12 @@ def test_pctl_sorted_signed_zeros_and_nan(spark):
     """The sorted form's primitive sort orders -0.0 before 0.0 where
     ``array_sort`` kept collection order; it folds -0.0 into 0.0 first,
     so a percentile that lands on a zero reads 0.0, as the bounded
-    form's grouping by value gives. NaN sorts last in both sorts, as in
-    the Python reference (the bounded form buckets NaN as cent 0, so it
-    is compared on the zeros group only)."""
+    form's grouping by value gives. NaN sorts last in both forms, as in
+    the Python reference and DuckDB (the bounded form gives NaN the top
+    bucket)."""
     groups = {
         "Z": [-0.0, -0.0, -0.0, 0.0, 7.0],
-        "N": [2.0, float("nan"), 1.0, 3.0],
+        "N": [200.0, float("nan"), 100.0, 300.0],
     }
     li = spark.createDataFrame(
         [(g, v) for g, vs in groups.items() for v in vs],
@@ -214,14 +214,15 @@ def test_pctl_sorted_signed_zeros_and_nan(spark):
             for r in getattr(agg, form)(li).collect()
         }
 
-    got = rows("_pctl_sorted")
+    got, bounded = rows("_pctl_sorted"), rows("_pctl_bounded")
     zeros = [v + 0.0 for v in groups["Z"]]
     want = tuple(_quantile_cont(zeros, p) for p in (0.5, 0.9, 0.99))
     assert _bits(got["Z"]) == _bits(want) and _bits(want[:1]) == _bits([0.0])
-    assert _bits(got["Z"]) == _bits(rows("_pctl_bounded")["Z"])
+    assert _bits(got["Z"]) == _bits(bounded["Z"])
     nan_last = sorted(groups["N"], key=lambda v: (math.isnan(v), v))
     want = tuple(_quantile_cont(nan_last, p) for p in (0.5, 0.9, 0.99))
     assert _bits(got["N"]) == _bits(want), (got["N"], want)
+    assert _bits(bounded["N"]) == _bits(want), (bounded["N"], want)
 
 
 def test_pctl_bounded_plan_has_no_data_sized_collect(spark):

@@ -1,34 +1,143 @@
-"""Plan-property regression tests (fast twin of plans/snapshot.py)."""
+"""Plan checks: ``plans.snapshot.check`` run live on every gate, its
+unit pins (an intentional-violation plan for each rule it enforces),
+direct pins of four core plan shapes (pushdown, pruning, broadcast,
+top-k), and plan shapes no registered gate shows."""
 
 from __future__ import annotations
 
-import io
-from contextlib import redirect_stdout
-
+from big_data_flight_spark.plans.snapshot import SNAPSHOT, check, gate_plan, plan_text
 from tests.conftest import SF_SMOKE
 
 
-def _plan(df, mode="formatted") -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain(mode)
-    return buf.getvalue()
-
-
-def test_filter_pushdown_reaches_scan(spark):
+def test_every_gate_plan_passes_check(spark):
+    """Builds every registered gate at SF_SMOKE in the shared session
+    (aliases are skipped: they share their target's builder object) and
+    runs ``check`` on its formatted plan: SNAPSHOT properties for the
+    gates that have them, and for every gate no clone needle, no
+    CartesianProduct, no filter above an unpushed scan, no build error."""
     from big_data_flight_spark.registry import _REGISTRY, _load_all_operator_modules
 
     _load_all_operator_modules()
-    plan = _plan(_REGISTRY["filter_pred"].builder(spark, SF_SMOKE))
+    names = [n for n, q in sorted(_REGISTRY.items()) if "alias" not in q.tags]
+    assert set(SNAPSHOT) <= set(names), set(SNAPSHOT) - set(names)
+    bad = {}
+    for name in names:
+        _, fails = gate_plan(spark, name, SF_SMOKE)
+        if fails:
+            bad[name] = fails
+    assert not bad, bad
+
+
+_CLEAN_PLAN = """== Physical Plan ==
+* HashAggregate (4)
++- Exchange (3)
+   +- * Filter (2)
+      +- Scan parquet  (1)
+
+
+(1) Scan parquet
+Output [2]: [a#1L, b#2]
+PushedFilters: [IsNotNull(a)]
+ReadSchema: struct<a:bigint,b:double>
+
+(2) Filter
+Input [2]: [a#1L, b#2]
+"""
+
+_NOPUSHDOWN_PLAN = """== Physical Plan ==
+* Project (4)
++- * Filter (3)
+   +- * ColumnarToRow (2)
+      +- Scan parquet  (1)
+
+
+(1) Scan parquet
+Output [3]: [a#1L, b#2, c#3]
+PushedFilters: []
+ReadSchema: struct<a:bigint,b:double,c:string>
+
+(2) ColumnarToRow
+Input [3]: [a#1L, b#2, c#3]
+
+(3) Filter
+Input [3]: [a#1L, b#2, c#3]
+Condition : (isnotnull(a#1L) AND (a#1L > 5))
+"""
+
+# A plain generator argument, as text_tokenize_counts plans it.
+_EXPLODE_PLAN = """== Physical Plan ==
+* Generate (2)
++- Scan parquet  (1)
+
+
+(1) Scan parquet
+Output [1]: [text#1]
+PushedFilters: []
+ReadSchema: struct<text:string>
+
+(2) Generate
+Arguments: explode(split(lower(text#1),  , -1)), [doc#0L], false, [tok#5]
+"""
+
+
+def test_check_passes_clean_plan():
+    assert check("no_such_gate", _CLEAN_PLAN) == []
+
+
+def test_check_passes_bare_explode_of_split():
+    assert check("no_such_gate", _EXPLODE_PLAN) == []
+
+
+def test_check_flags_filter_above_unpushed_scan():
+    """Intentional violation: a Filter over a multi-column scan with
+    empty PushedFilters, through a ColumnarToRow and directly."""
+    nopush = "NOPUSHDOWN: filter above a scan with empty PushedFilters"
+    assert check("g", _NOPUSHDOWN_PLAN) == [nopush]
+    direct = _NOPUSHDOWN_PLAN.replace("   +- * ColumnarToRow (2)\n      +- Scan", "   +- Scan")
+    assert check("g", direct) == [nopush]
+    pushed = _NOPUSHDOWN_PLAN.replace("PushedFilters: []", "PushedFilters: [IsNotNull(a)]")
+    assert check("g", pushed) == []
+
+
+def test_check_flags_cartesian_product():
+    plan = _CLEAN_PLAN.replace("Exchange (3)", "CartesianProduct (3)")
+    assert check("g", plan) == ["CartesianProduct"]
+
+
+def test_check_flags_clone_needles():
+    """Intentional violation: per-element access into a re-inlined
+    tokenization, the r10 InferFiltersFromGenerate clone."""
+    for needle, arg in (
+        ("element_at(split(", "element_at(split(lower(text#1),  , -1), 1)"),
+        ("element_at(filter(split", "element_at(filter(split(lower(text#1),  , -1), x -> true), 1)"),
+    ):
+        plan = _EXPLODE_PLAN.replace("explode(split(lower(text#1),  , -1))", arg)
+        assert check("g", plan) == [f"clone `{needle}`"]
+
+
+def test_check_reads_snapshot_properties():
+    assert check("join_broadcast", "BroadcastHashJoin") == []
+    assert check("join_broadcast", "SortMergeJoin") == [
+        "`BroadcastHashJoin`",
+        "`!SortMergeJoin`",
+    ]
+
+
+def _gate_plan_text(spark, name: str) -> str:
+    from big_data_flight_spark.registry import _REGISTRY, _load_all_operator_modules
+
+    _load_all_operator_modules()
+    return plan_text(_REGISTRY[name].builder(spark, SF_SMOKE))
+
+
+def test_filter_pushdown_reaches_scan(spark):
+    plan = _gate_plan_text(spark, "filter_pred")
     assert "PushedFilters: [" in plan
     assert "IsNotNull(l_quantity)" in plan or "GreaterThanOrEqual" in plan
 
 
 def test_projection_prunes_read_schema(spark):
-    from big_data_flight_spark.registry import _REGISTRY, _load_all_operator_modules
-
-    _load_all_operator_modules()
-    plan = _plan(_REGISTRY["scan_parquet"].builder(spark, SF_SMOKE))
+    plan = _gate_plan_text(spark, "scan_parquet")
     # nation has 3 read columns here; no other columns may be read
     assert "ReadSchema" in plan
     read = plan.split("ReadSchema:")[1].splitlines()[0]
@@ -36,19 +145,13 @@ def test_projection_prunes_read_schema(spark):
 
 
 def test_dimension_join_broadcasts(spark):
-    from big_data_flight_spark.registry import _REGISTRY, _load_all_operator_modules
-
-    _load_all_operator_modules()
-    plan = _plan(_REGISTRY["join_broadcast"].builder(spark, SF_SMOKE))
+    plan = _gate_plan_text(spark, "join_broadcast")
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
 
 def test_topk_uses_take_ordered(spark):
-    from big_data_flight_spark.registry import _REGISTRY, _load_all_operator_modules
-
-    _load_all_operator_modules()
-    plan = _plan(_REGISTRY["limit_topk"].builder(spark, SF_SMOKE))
+    plan = _gate_plan_text(spark, "limit_topk")
     assert "TakeOrderedAndProject" in plan
 
 
@@ -139,7 +242,7 @@ def test_pagerank_iteration_broadcasts_scores(spark):
         .groupBy("dst")
         .agg(F.sum(F.floor(F.col("score") / F.col("d"))).alias("contrib"))
     )
-    plan = _plan(contrib)
+    plan = plan_text(contrib)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 

@@ -393,10 +393,9 @@ def test_r12_window_purges_remaining_stale_rows():
     then r6 reverse-alphabetical), the spare slots go to the
     steady-state head start (oldest FRESH cohort = r7, alphabetically
     first within it: agg_bitmap_rolling_distinct), and the window
-    stays exactly 50. The r10/r11 pins live in git history alongside
-    their snapshots (stale_rows_r1{0,1}.json stay committed as the
-    audit trail); this test always pins the LIVE window against the
-    LIVE round's snapshot."""
+    stays exactly 50. The r10/r11 pins and their snapshots live in git
+    history; this test always pins the LIVE window against the LIVE
+    round's snapshot."""
     import json
     import os
 

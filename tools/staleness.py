@@ -123,9 +123,9 @@ def _snapshot_round() -> int:
     round — r11 review), else the latest CORRECTNESS_r{NN}.json
     present (the audit counts rows through that round, so the snapshot
     is 'the backlog entering round NN+1' and is committed as
-    tests/stale_rows_r{NN+1}.json by the rotation that consumes it —
-    matching r10's naming, where stale_rows_r10.json pinned the window
-    built FROM the r1..r9 rows)."""
+    tests/stale_rows_r{NN+1}.json by the rotation that consumes it: the
+    snapshot named for round NN+1 pins the window built from the
+    r1..rNN rows)."""
     for a in sys.argv[1:]:
         if not a.startswith("--"):
             try:
