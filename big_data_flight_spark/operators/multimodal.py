@@ -203,31 +203,41 @@ def _synth_wav(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame({"doc_id": pdf["doc_id"], "wav_bin": blobs})
 
 
-def _decode_wav(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Feature-side kernel: parse the WAV container back through the
-    stdlib ``wave`` reader (header + PCM frames — no trust in the
-    synth side) and reduce to integer features."""
+def _read_pcm16(doc_id: int, blob: bytes):
+    """Parse one WAV container through the stdlib ``wave`` reader
+    (header + PCM frames — no trust in the producing stage) into
+    (int64 samples, sample rate). Raises on anything but mono PCM16:
+    an explicit raise, not an assert, so the fail-loudly contract
+    survives ``python -O`` (``wave`` itself accepts stereo / 8-bit
+    containers — only unknown format tags raise)."""
     import io as _io
     import wave as _wave
 
     import numpy as np
 
+    with _wave.open(_io.BytesIO(blob), "rb") as w:
+        if w.getnchannels() != 1 or w.getsampwidth() != 2:
+            raise ValueError(
+                f"doc {doc_id}: expected mono PCM16, got "
+                f"channels={w.getnchannels()} width={w.getsampwidth()}"
+            )
+        rate = w.getframerate()
+        x = np.frombuffer(w.readframes(w.getnframes()), dtype="<i2").astype(np.int64)
+    return x, rate
+
+
+def _decode_wav(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Feature-side kernel: parse the WAV container back through the
+    stdlib ``wave`` reader (header + PCM frames — no trust in the
+    synth side) and reduce to integer features."""
+    import numpy as np
+
     for pdf in batches:
         rows = {"doc_id": [], "n_frames": [], "sample_rate": [], "sum_abs": [], "peak": []}
         for doc_id, blob in zip(pdf["doc_id"], pdf["wav_bin"]):
-            with _wave.open(_io.BytesIO(blob), "rb") as w:
-                # explicit raise, not assert: the fail-loudly contract
-                # must survive python -O (wave itself accepts stereo /
-                # 8-bit containers — only unknown format tags raise)
-                if w.getnchannels() != 1 or w.getsampwidth() != 2:
-                    raise ValueError(
-                        f"doc {doc_id}: expected mono PCM16, got "
-                        f"channels={w.getnchannels()} width={w.getsampwidth()}"
-                    )
-                n, rate = w.getnframes(), w.getframerate()
-                x = np.frombuffer(w.readframes(n), dtype="<i2").astype(np.int64)
+            x, rate = _read_pcm16(doc_id, blob)
             rows["doc_id"].append(doc_id)
-            rows["n_frames"].append(n)
+            rows["n_frames"].append(len(x))
             rows["sample_rate"].append(rate)
             rows["sum_abs"].append(int(np.abs(x).sum()))
             rows["peak"].append(int(x.max()) if len(x) else 0)
@@ -426,9 +436,6 @@ def _wav_window_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
     (energy = sum of squares, zero crossings = sign flips, peak =
     max |x|) — the classic VAD/segmentation feature row, all-integer
     so the closed-form oracle has zero float surface."""
-    import io as _io
-    import wave as _wave
-
     import numpy as np
 
     for pdf in batches:
@@ -437,15 +444,7 @@ def _wav_window_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
             "energy": [], "n_zero_cross": [], "peak_abs": [],
         }
         for doc_id, blob in zip(pdf["doc_id"], pdf["wav_bin"]):
-            with _wave.open(_io.BytesIO(blob), "rb") as w:
-                if w.getnchannels() != 1 or w.getsampwidth() != 2:
-                    raise ValueError(
-                        f"doc {doc_id}: expected mono PCM16, got "
-                        f"channels={w.getnchannels()} width={w.getsampwidth()}"
-                    )
-                x = np.frombuffer(w.readframes(w.getnframes()), dtype="<i2").astype(
-                    np.int64
-                )
+            x, _ = _read_pcm16(doc_id, blob)
             if len(x) != 160:
                 raise ValueError(f"doc {doc_id}: expected 160 frames, got {len(x)}")
             neg = x < 0
@@ -939,21 +938,10 @@ def _resample_wav(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     import io as _io
     import wave as _wave
 
-    import numpy as np
-
     for pdf in batches:
         blobs = []
         for doc_id, blob in zip(pdf["doc_id"], pdf["wav_bin"]):
-            with _wave.open(_io.BytesIO(blob), "rb") as w:
-                if w.getnchannels() != 1 or w.getsampwidth() != 2:
-                    raise ValueError(
-                        f"doc {doc_id}: expected mono PCM16, got "
-                        f"channels={w.getnchannels()} width={w.getsampwidth()}"
-                    )
-                rate = w.getframerate()
-                x = np.frombuffer(
-                    w.readframes(w.getnframes()), dtype="<i2"
-                ).astype(np.int64)
+            x, rate = _read_pcm16(doc_id, blob)
             pairs = x[: len(x) // 2 * 2].reshape(-1, 2)
             y = ((pairs[:, 0] + pairs[:, 1]) // 2).astype("<i2")
             bio = _io.BytesIO()
@@ -1216,26 +1204,16 @@ def audio_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Full-signal audio feature kernel over REAL decoded PCM16: RMS
     (floor-rounded to 6dp per the parity convention — never bankers'
     round on a float), strict sign-product zero crossings, duration
-    from the parsed header. sum(x²) is an exact integer < 2^53, /n is
+    from the decoded frame count and the header's rate. sum(x²) is an exact integer < 2^53, /n is
     one IEEE divide, sqrt is correctly rounded — bit-identical in both
     engines before the shared floor round."""
-    import io as _io
     import math
-    import wave as _wave
-
-    import numpy as np
 
     for pdf in batches:
         rows = {"doc_id": [], "rms": [], "zero_crossings": [], "duration_ms": []}
         for doc_id, blob in zip(pdf["doc_id"], pdf["wav_bin"]):
-            with _wave.open(_io.BytesIO(blob), "rb") as w:
-                if w.getnchannels() != 1 or w.getsampwidth() != 2:
-                    raise ValueError(
-                        f"doc {doc_id}: expected mono PCM16, got "
-                        f"channels={w.getnchannels()} width={w.getsampwidth()}"
-                    )
-                n, rate = w.getnframes(), w.getframerate()
-                x = np.frombuffer(w.readframes(n), dtype="<i2").astype(np.int64)
+            x, rate = _read_pcm16(doc_id, blob)
+            n = len(x)
             rms = math.sqrt(int((x * x).sum()) / n) if n else 0.0
             rows["doc_id"].append(doc_id)
             rows["rms"].append(math.floor(rms * 1e6 + 0.5) / 1e6)

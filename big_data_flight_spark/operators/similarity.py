@@ -33,56 +33,80 @@ from big_data_flight_spark.registry import gate_query
 DIM = 64  # fixed embedding dimensionality (FIXTURES.md, verified)
 
 
-def _norm(col):  # double L2 norm of a float array, deterministic fold
-    as_dbl = F.transform(col, lambda x: x.cast("double"))
-    return F.sqrt(F.aggregate(as_dbl, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
-def _dot(a, b):  # double dot product, deterministic left-to-right fold
-    prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _to_double(col):
-    """Per-VECTOR float→double element cast. Hoisting the cast out of a
-    per-PAIR kernel is value-identical (float→double widening is exact,
-    and _dot_d below multiplies/folds the same doubles in the same
-    order) but runs |V| times instead of |V|²·2 times inside a
-    quadratic sweep (r13, VERDICT r12 #3 / guide §1.2 per-task work)."""
+def _widen(col):
+    """float[] -> double[], element by element (the widening is exact):
+    the module's one whole-vector cast. Cosine sides (``_vectors``) and
+    the quantize / Matryoshka / PQ inputs widen here, once per vector,
+    before any arithmetic."""
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def _dot_d(a, b):
-    """_dot over ALREADY-double arrays (see _to_double): the identical
-    left-to-right IEEE fold minus the two per-element casts."""
-    prods = F.zip_with(a, b, lambda x, y: x * y)
-    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
+def _vectors(frame: DataFrame, side: str, *keep, emb: str = "embedding") -> DataFrame:
+    """The per-vector half of the one exact-cosine kernel: ``keep``
+    plus ``emb`` widened once (``{side}_v``) and its L2 norm folded
+    once (``{side}_n``, left to right, then sqrt). A pair then pays
+    one dot product (``_cos``), not 128 casts and two more norm folds."""
+    v = f"{side}_v"
+    widened = frame.select(*keep, _widen(F.col(emb)).alias(v))
+    return widened.withColumn(
+        f"{side}_n", F.sqrt(F.aggregate(F.col(v), F.lit(0.0), lambda acc, x: acc + x * x))
+    )
 
 
-def _norm_d(col):
-    """_norm over an ALREADY-double array — same fold, casts hoisted."""
-    return F.sqrt(F.aggregate(col, F.lit(0.0), lambda acc, x: acc + x * x))
+def _cos(a: str, b: str):
+    """The per-pair half: ``dot(a_v, b_v) / (a_n * b_n)`` over two
+    ``_vectors`` sides. The dot is the same in-order IEEE fold as the
+    oracles' ``_DUCK_DOT``/``_duck_norm`` (sqrt and divide are
+    correctly rounded), so the raw doubles are bit-identical across
+    engines; a reassociated copy in one gate would break only that
+    gate's parity, hence one definition.
 
-
-def _cos_arr(a, b):
-    """Cosine of two double arrays — THE one IEEE expression tree every
-    cosine-ranking gate shares (sim_ann_ivf's cell probe,
-    sim_rrf_fusion's ranker, ...). One definition keeps the fold
-    bit-identical across gates: a reassociated copy in one gate would
-    silently break only that gate's cross-engine parity.
-
-    WHY THIS FAMILY RANKS ON THE ROUNDED COSINE (vs CLAUDE.md's
+    Why this family ranks on the ROUNDED cosine (against CLAUDE.md's
     general never-round-a-rank-key rule, which comes from the q2/ln
-    lesson): the cosine pipeline is transcendental-free — casts,
-    products, in-order folds, sqrt, divide are all IEEE-identical on
-    identical inputs — so the RAW doubles are already bit-identical
-    across engines and the only cross-engine hazard either way is an
-    exact 1e-6 rounding boundary (measure-zero, and driver-validated
-    across six fixture generations since r3). Rank-on-raw would trade
-    that for reordering today's rounding-collapsed ties; for
-    ln-tainted keys (tfidf/bm25) the rounded form is additionally the
-    STRICTLY safer one, since raw values there can differ by 1 ulp."""
-    return _dot(a, b) / (_norm(a) * _norm(b))
+    lesson): the pipeline is transcendental-free, so the only
+    cross-engine hazard either way is an exact 1e-6 rounding boundary
+    (measure-zero, and driver-validated across six fixture generations
+    since r3). Rank-on-raw would trade that for reordering today's
+    rounding-collapsed ties; for ln-tainted keys (tfidf/bm25) the
+    rounded form is the strictly safer one, since raw values there can
+    differ by 1 ulp."""
+    prods = F.zip_with(F.col(f"{a}_v"), F.col(f"{b}_v"), lambda x, y: x * y)
+    dot = F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
+    return dot / (F.col(f"{a}_n") * F.col(f"{b}_n"))
+
+
+def _cos_pairs(e: DataFrame, a: str, b: str, threshold: float) -> DataFrame:
+    """All pairs ``a < b`` of ``e``'s vectors with cosine >= threshold,
+    as ``(a, b, cos)``. Both predicates sit in the join condition, the
+    cheap id test first: a withColumn+filter form lets Catalyst push
+    the cosine test ahead of it, so the fold runs on all |V|^2 ordered
+    combinations instead of the |V|^2/2 candidates (And short-circuits
+    left to right). The left side streams (``fan_out``)."""
+    left = fan_out(_vectors(e, "a", F.col("vec_id").alias(a)), a)
+    right = _vectors(e, "b", F.col("vec_id").alias(b))
+    cos = _cos("a", "b")
+    return left.join(right, (F.col(a) < F.col(b)) & (cos >= threshold)).select(
+        a, b, cos.alias("cos")
+    )
+
+
+def _cos_top_k(
+    q: DataFrame, c: DataFrame, on, tie: str, k: int | None, part: str = "query_id"
+) -> DataFrame:
+    """The query x corpus ranker: broadcast ``q`` (a ``_vectors`` side
+    "q") against the streamed corpus ``c`` (side "c", widened by
+    ``fan_out`` on ``tie``), joined on ``on``; ``cos_sim`` is
+    ROUND(cos, 6) and ``rn`` its row_number per ``part`` with the
+    ``tie`` id breaking ties, kept to the top ``k`` (``k=None``: the
+    scored pairs, unranked). The vector columns are dropped."""
+    keep = [x for x in q.columns + c.columns if x not in ("q_v", "q_n", "c_v", "c_n")]
+    scored = F.broadcast(q).join(fan_out(c, tie), on).select(
+        *keep, F.round(_cos("q", "c"), 6).alias("cos_sim")
+    )
+    if k is None:
+        return scored
+    w = Window.partitionBy(part).orderBy(F.col("cos_sim").desc(), F.col(tie))
+    return scored.withColumn("rn", F.row_number().over(w).cast("long")).filter(F.col("rn") <= k)
 
 
 def _ordered_sum(col):
@@ -137,41 +161,10 @@ def sim_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     This exact quadratic form is the correctness baseline; the scale
     path is sim_ann_lsh (LSH-blocked candidates, then this same exact
-    scoring on candidates only).
-
-    r13: embeddings are cast to double ONCE per vector before the pair
-    join (_to_double) and the per-pair kernel is the cast-free _dot_d —
-    bit-identical cosine (widening cast hoisted out of the fold), but
-    the quadratic stage stops paying 128 float→double casts per pair."""
+    scoring on candidates only)."""
     e = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 1000)
-    v = e.select(
-        "vec_id",
-        _to_double(F.col("embedding")).alias("emb_d"),
-    ).select("vec_id", "emb_d", _norm_d(F.col("emb_d")).alias("nrm"))
-    a = fan_out(
-        v.select(
-            F.col("vec_id").alias("vec_a"),
-            F.col("emb_d").alias("emb_a"),
-            F.col("nrm").alias("norm_a"),
-        ),
-        "vec_a",
-    )
-    b = v.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("emb_d").alias("emb_b"),
-        F.col("nrm").alias("norm_b"),
-    )
-    cos = _dot_d(F.col("emb_a"), F.col("emb_b")) / (F.col("norm_a") * F.col("norm_b"))
-    # Both predicates go into the join condition EXPLICITLY, cheap one
-    # first: the previous withColumn+filter form let Catalyst push the
-    # cosine filter into the BNLJ condition AHEAD of the id test, so
-    # the 64-element fold ran on all |V|² ordered combos instead of the
-    # |V|²/2 candidate pairs (And short-circuits left-to-right; plan
-    # verified). Same pairs, same values — only the evaluation count
-    # changes.
-    return (
-        a.join(b, (F.col("vec_a") < F.col("vec_b")) & (cos >= 0.3))
-        .select("vec_a", "vec_b", F.round(cos, 6).alias("cos_sim"))
+    return _cos_pairs(e, "vec_a", "vec_b", 0.3).select(
+        "vec_a", "vec_b", F.round("cos", 6).alias("cos_sim")
     )
 
 
@@ -200,38 +193,11 @@ def sim_topk_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly how batch k-NN scales: the corpus streams, queries ride
     along."""
     e = table(spark, sf_dir, "embeddings")
-    # Norms are precomputed per VECTOR before the pair join (the
-    # sim_cosine_pairs rule; r6 review: computing them inside the
-    # per-pair expression re-ran each O(64) norm fold once per pair —
-    # ~3x the fold work of the dot product alone). Value-identical:
-    # same fold, same IEEE ops, just evaluated once per row.
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        _to_double(F.col("embedding")).alias("emb_q"),
-    ).select("query_id", "emb_q", _norm_d(F.col("emb_q")).alias("nrm_q"))
-    # corpus side drives parallelism (queries are broadcast). Double-cast
-    # hoisted per vector (r13, the sim_cosine_pairs rule): _dot_d folds
-    # the same doubles in the same order, minus 128 per-pair casts.
-    c = fan_out(
-        e.select(
-            F.col("vec_id").alias("neighbor_id"),
-            _to_double(F.col("embedding")).alias("emb_c"),
-        ).select("neighbor_id", "emb_c", _norm_d(F.col("emb_c")).alias("nrm_c")),
-        "neighbor_id",
-    )
-    cos = _dot_d(F.col("emb_q"), F.col("emb_c")) / (F.col("nrm_q") * F.col("nrm_c"))
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", F.round(cos, 6).alias("cos_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("query_id", "neighbor_id", "cos_sim", F.col("rn").cast("long").alias("rn"))
-    )
+    q = _vectors(e.filter(F.col("vec_id") < 10), "q", F.col("vec_id").alias("query_id"))
+    c = _vectors(e, "c", F.col("vec_id").alias("neighbor_id"))
+    return _cos_top_k(
+        q, c, F.col("neighbor_id") != F.col("query_id"), "neighbor_id", 5
+    ).select("query_id", "neighbor_id", "cos_sim", "rn")
 
 
 @gate_query(
@@ -393,15 +359,9 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # exact ≥0.3 pairs on the same slice, for recall accounting
-    v = fan_out(table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 500), "vec_id")
-    a = v.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"))
-    b = v.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"))
-    cos = _dot(F.col("ea"), F.col("eb")) / (_norm(F.col("ea")) * _norm(F.col("eb")))
-    truth = (
-        a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .filter(cos >= 0.3)
-        .select("vec_a", "vec_b")
-    )
+    truth = _cos_pairs(
+        table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 500), "vec_a", "vec_b", 0.3
+    ).select("vec_a", "vec_b")
     # Single-pass audit: full-outer join the two pair sets and reduce
     # once — each side is evaluated exactly once (the previous three
     # separate .count() calls recomputed both DAGs twice).
@@ -450,30 +410,14 @@ def text_near_dedup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     → n-gram Jaccard → SimHash → MinHash-LSH → embedding cosine.
     Scale path: swap the bounded pair join for sim_ann_lsh / sim_ann_ivf
     candidates, keep this exact scoring on candidates."""
-    e = table(spark, sf_dir, "embeddings")
+    pairs = _cos_pairs(table(spark, sf_dir, "embeddings"), "doc_a", "doc_b", 0.35)
     d = table(spark, sf_dir, "documents").select("doc_id", "lang")
-    v = e.select("vec_id", "embedding", _norm(F.col("embedding")).alias("nrm"))
-    a = fan_out(
-        v.select(
-            F.col("vec_id").alias("doc_a"), F.col("embedding").alias("ea"), F.col("nrm").alias("na")
-        ),
-        "doc_a",
-    )
-    b = v.select(
-        F.col("vec_id").alias("doc_b"), F.col("embedding").alias("eb"), F.col("nrm").alias("nb")
-    )
-    cos = _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
-    pairs = (
-        a.join(b, F.col("doc_a") < F.col("doc_b"))
-        .withColumn("cs", cos)
-        .filter(F.col("cs") >= 0.35)
-    )
     da = d.select(F.col("doc_id").alias("doc_a"), F.col("lang").alias("lang_a"))
     db = d.select(F.col("doc_id").alias("doc_b"), F.col("lang").alias("lang_b"))
     return (
         pairs.join(F.broadcast(da), "doc_a")
         .join(F.broadcast(db), "doc_b")
-        .select("doc_a", "doc_b", "lang_a", "lang_b", F.round("cs", 6).alias("cos_sim"))
+        .select("doc_a", "doc_b", "lang_a", "lang_b", F.round("cos", 6).alias("cos_sim"))
     )
 
 
@@ -531,37 +475,21 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("cell", F.transform("pc", lambda s: s["cv"]).alias("centroid"))
     )
 
-    emb_dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), emb_dbl.alias("q_emb")
-    )
+    q = _vectors(e.filter(F.col("vec_id") < 10), "q", F.col("vec_id").alias("query_id"))
     # query -> top-_IVF_NPROBE cells by centroid cosine (the docstring's
     # recall-floor derivation — 'probing 5 of 10 cells bounds recall
     # near 0.5' — is tied to this constant; r6 review named it).
-    w_cell = Window.partitionBy("query_id").orderBy(F.col("c_sim").desc(), F.col("cell"))
-    probe = (
-        q.crossJoin(F.broadcast(cent))
-        .select("query_id", "q_emb", "cell", _cos_arr(F.col("q_emb"), F.col("centroid")).alias("c_sim"))
-        .withColumn("rn", F.row_number().over(w_cell))
-        .filter(F.col("rn") <= _IVF_NPROBE)
-        .select("query_id", "q_emb", "cell")
-    )
+    probe = _cos_top_k(
+        q, _vectors(cent, "c", "cell", emb="centroid"), None, "cell", _IVF_NPROBE
+    ).select("query_id", F.col("cell").alias("q_cell"))
     # search only within probed cells
-    corpus = fan_out(
-        e.select(
-            F.col("vec_id").alias("neighbor_id"), F.col("label").alias("cell"), emb_dbl.alias("c_emb")
-        ),
+    ivf_top = _cos_top_k(
+        q.join(probe, "query_id"),
+        _vectors(e, "c", F.col("vec_id").alias("neighbor_id"), F.col("label").alias("cell")),
+        (F.col("q_cell") == F.col("cell")) & (F.col("neighbor_id") != F.col("query_id")),
         "neighbor_id",
-    )
-    w_nn = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    ivf_top = (
-        probe.join(corpus, "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", F.round(_cos_arr(F.col("q_emb"), F.col("c_emb")), 6).alias("cos_sim"))
-        .withColumn("rn", F.row_number().over(w_nn))
-        .filter(F.col("rn") <= 5)
-        .select("query_id", "neighbor_id")
-    )
+        5,
+    ).select("query_id", "neighbor_id")
     exact_top = sim_topk_neighbors(spark, sf_dir).select("query_id", "neighbor_id")
     # One-pass audit: full-outer join the IVF and exact result sets and
     # reduce once — each DAG evaluates exactly once.
@@ -608,20 +536,11 @@ def multimodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join that makes a training-data pipeline 'multimodal'."""
     d = table(spark, sf_dir, "documents")
     e = table(spark, sf_dir, "embeddings")
-    return (
-        d.join(e, d.doc_id == e.vec_id)
-        .filter(
-            F.col("lang").isin("en", "de") & (F.col("n_chars") > 250) & (F.col("label") < 5)
-        )
-        .select(
-            "doc_id",
-            "lang",
-            "source",
-            "n_chars",
-            "label",
-            F.round(_norm(F.col("embedding")), 6).alias("vec_norm"),
-        )
+    keep = ("doc_id", "lang", "source", "n_chars", "label")
+    both = d.join(e, d.doc_id == e.vec_id).filter(
+        F.col("lang").isin("en", "de") & (F.col("n_chars") > 250) & (F.col("label") < 5)
     )
+    return _vectors(both, "e", *keep).select(*keep, F.round("e_n", 6).alias("vec_norm"))
 
 
 @gate_query(
@@ -666,37 +585,12 @@ def sim_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     on both engines. Probes broadcast, corpus streams (the batch k-NN
     scale shape); the per-probe vote table is 5 rows."""
     e = table(spark, sf_dir, "embeddings")
-    # per-vector norms precomputed before the pair join (see
-    # sim_topk_neighbors; value-identical, 3x fewer folds per pair)
-    q = e.filter(F.col("vec_id") < 100).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("true_label"),
-        F.col("embedding").alias("emb_q"),
-        _norm(F.col("embedding")).alias("nrm_q"),
+    q = _vectors(
+        e.filter(F.col("vec_id") < 100), "q",
+        F.col("vec_id").alias("query_id"), F.col("label").alias("true_label"),
     )
-    c = fan_out(
-        e.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("label").alias("n_label"),
-            F.col("embedding").alias("emb_c"),
-            _norm(F.col("embedding")).alias("nrm_c"),
-        ),
-        "neighbor_id",
-    )
-    cos = _dot(F.col("emb_q"), F.col("emb_c")) / (F.col("nrm_q") * F.col("nrm_c"))
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id", "true_label", "neighbor_id", "n_label",
-            F.round(cos, 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    top5 = scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5)
+    c = _vectors(e, "c", F.col("vec_id").alias("neighbor_id"), F.col("label").alias("n_label"))
+    top5 = _cos_top_k(q, c, F.col("neighbor_id") != F.col("query_id"), "neighbor_id", 5)
     votes = top5.groupBy("query_id", "true_label", "n_label").agg(
         F.count(F.lit(1)).alias("v")
     )
@@ -835,17 +729,17 @@ def sim_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     l1_q keeps a numeric checksum. Pure per-row projection: zero
     shuffle, scan-speed. Dequantization error <= scale/2 per element."""
     e = table(spark, sf_dir, "embeddings")
-    as_dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    scale = F.array_max(F.transform(as_dbl, F.abs)) / F.lit(127.0)
+    v = e.select("vec_id", _widen(F.col("embedding")).alias("v"))
+    scale = F.array_max(F.transform("v", F.abs)) / F.lit(127.0)
     q_elem = lambda x: F.when(F.col("scale") == 0.0, F.lit(0)).otherwise(  # noqa: E731
         F.greatest(
             F.lit(-127.0),
-            F.least(F.lit(127.0), F.floor(x.cast("double") / F.col("scale") + 0.5)),
+            F.least(F.lit(127.0), F.floor(x / F.col("scale") + 0.5)),
         ).cast("int")
     )
-    quant = F.transform(F.col("embedding"), q_elem)
+    quant = F.transform("v", q_elem)
     return (
-        e.withColumn("scale", scale)
+        v.withColumn("scale", scale)
         .select(
             "vec_id",
             (F.floor(F.col("scale") * 1e6 + 0.5) / 1e6).alias("scale_r"),
@@ -923,16 +817,12 @@ def sim_matryoshka_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pure per-row projection: zero shuffle, scan-speed, trivially
     embarrassingly parallel at 100 TB."""
     e = table(spark, sf_dir, "embeddings")
-    as_dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    sq_sum = lambda col: F.aggregate(  # noqa: E731
-        col, F.lit(0.0), lambda a, x: a + x * x
+    d = _vectors(e, "e", "vec_id").select(
+        "vec_id", F.col("e_n").alias("norm_full"), F.slice(F.col("e_v"), 1, 8).alias("sub")
     )
-    d = (
-        e.select("vec_id", as_dbl.alias("e"))
-        .withColumn("norm_full", F.sqrt(sq_sum(F.col("e"))))
-        .withColumn("sub", F.slice(F.col("e"), 1, 8))
+    d = d.withColumn(
+        "norm_sub", F.sqrt(F.aggregate(F.col("sub"), F.lit(0.0), lambda a, x: a + x * x))
     )
-    d = d.withColumn("norm_sub", F.sqrt(sq_sum(F.col("sub"))))
     qm = F.when(
         F.col("norm_sub") == 0.0,
         F.transform(F.col("sub"), lambda x: F.lit(0).cast("long")),
@@ -1153,7 +1043,7 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     M*K LUT replaces the reconstruction join verbatim (same algebra,
     measured identical results here)."""
     e = table(spark, sf_dir, "embeddings")
-    emb_dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    emb_dbl = _widen(F.col("embedding"))
     sub = F.expr(f"slice(v, m * {PQ_SUB} + 1, {PQ_SUB})")
     cb = (
         e.filter(F.col("vec_id") < PQ_K)
@@ -1956,31 +1846,15 @@ def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rankers are the ANN gates (LSH / IVF-PQ / Hamming) and the
     fusion cost is O(queries x k), independent of corpus size."""
     e = table(spark, sf_dir, "embeddings")
-    emb_dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
 
     # --- ranker 1: exact cosine top-k (the sim_topk_neighbors shape)
-    q = e.filter(F.col("vec_id") < _RRF_NQ).select(
-        F.col("vec_id").alias("query_id"), emb_dbl.alias("q_emb")
-    )
-    corpus = fan_out(
-        e.select(F.col("vec_id").alias("neighbor_id"), emb_dbl.alias("c_emb")), "neighbor_id"
-    )
-    w_cos = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    cosr = (
-        F.broadcast(q)
-        .crossJoin(corpus)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(_cos_arr(F.col("q_emb"), F.col("c_emb")), 6).alias("cos_sim"),
-        )
-        .withColumn("cos_rank", F.row_number().over(w_cos).cast("long"))
-        .filter(F.col("cos_rank") <= _RRF_K)
-        .select("query_id", "neighbor_id", "cos_rank")
-    )
+    cosr = _cos_top_k(
+        _vectors(e.filter(F.col("vec_id") < _RRF_NQ), "q", F.col("vec_id").alias("query_id")),
+        _vectors(e, "c", F.col("vec_id").alias("neighbor_id")),
+        F.col("neighbor_id") != F.col("query_id"),
+        "neighbor_id",
+        _RRF_K,
+    ).select("query_id", "neighbor_id", F.col("rn").alias("cos_rank"))
 
     # --- ranker 2: 1-bit sign-signature Hamming top-k
     sigs = e.select(
@@ -2082,7 +1956,7 @@ def sim_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape = batch k-NN with a label-inequality predicate: anchors are
     a bounded broadcast slice, the corpus streams (io.fan_out), the
     per-anchor rank is a WindowGroupLimit. Ranking follows the cosine
-    family's rounded-rank convention (module docstring on _cos_arr:
+    family's rounded-rank convention (the docstring on _cos:
     the cosine pipeline is transcendental-free, so ROUND(cos, 6) with
     a neg_id tie-break is engine-identical); labels ride the scored
     row so the output is directly a (anchor, negative) training-pair
@@ -2094,42 +1968,16 @@ def sim_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     union (sim_ann_lsh/ivf buckets minus the anchor's own-label cell)
     and re-scores candidates with this same exact expression."""
     e = table(spark, sf_dir, "embeddings")
-    a = e.filter(F.col("vec_id") < _HNM_N_ANCHORS).select(
-        F.col("vec_id").alias("anchor_id"),
-        F.col("label").cast("long").alias("anchor_label"),
-        F.col("embedding").alias("emb_a"),
-        _norm(F.col("embedding")).alias("nrm_a"),
+    a = _vectors(
+        e.filter(F.col("vec_id") < _HNM_N_ANCHORS), "q",
+        F.col("vec_id").alias("anchor_id"), F.col("label").cast("long").alias("anchor_label"),
     )
-    c = fan_out(
-        e.select(
-            F.col("vec_id").alias("neg_id"),
-            F.col("label").cast("long").alias("neg_label"),
-            F.col("embedding").alias("emb_c"),
-            _norm(F.col("embedding")).alias("nrm_c"),
-        ),
-        "neg_id",
+    c = _vectors(
+        e, "c", F.col("vec_id").alias("neg_id"), F.col("label").cast("long").alias("neg_label")
     )
-    cos = _dot(F.col("emb_a"), F.col("emb_c")) / (F.col("nrm_a") * F.col("nrm_c"))
-    scored = (
-        F.broadcast(a)
-        .crossJoin(c)
-        .filter(F.col("anchor_label") != F.col("neg_label"))
-        .select(
-            "anchor_id",
-            "anchor_label",
-            "neg_id",
-            "neg_label",
-            F.round(cos, 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neg_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= _HNM_K)
-        .select("anchor_id", "anchor_label", "neg_id", "neg_label", "cos_sim", "rn")
-    )
+    return _cos_top_k(
+        a, c, F.col("anchor_label") != F.col("neg_label"), "neg_id", _HNM_K, part="anchor_id"
+    ).select("anchor_id", "anchor_label", "neg_id", "neg_label", "cos_sim", "rn")
 
 
 # ---------------------------------------------------------------------------
@@ -2295,35 +2143,20 @@ def sim_ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Exact scoring over the full corpus — the audit's ground truth
     # (round(cos,6)+id ranking: the sim_topk_neighbors proven pair).
-    q = e.filter(F.col("vec_id") < _RECALL_NQUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("eq"),
-        _norm(F.col("embedding")).alias("nq"),
+    q = _vectors(
+        e.filter(F.col("vec_id") < _RECALL_NQUERIES), "q", F.col("vec_id").alias("query_id")
     )
-    c = fan_out(
-        e.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("label").alias("cell"),
-            F.col("embedding").alias("ec"),
-            _norm(F.col("embedding")).alias("nc"),
-        ),
-        "neighbor_id",
-    )
-    cos = _dot(F.col("eq"), F.col("ec")) / (F.col("nq") * F.col("nc"))
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", "cell", F.round(cos, 6).alias("cs"))
-        # scored feeds TWO divergent subtrees (exact top-k and the
-        # nprobe candidate sweep) whose exchanges differ, so
-        # ReuseExchange can't dedupe — without this the declared
-        # exact-baseline cosine scan runs twice per build (r11 review).
-        # Same move as the oracle's MATERIALIZED scored CTE.
-        .localCheckpoint()
-    )
+    c = _vectors(e, "c", F.col("vec_id").alias("neighbor_id"), F.col("label").alias("cell"))
+    # scored feeds TWO divergent subtrees (exact top-k and the nprobe
+    # candidate sweep) whose exchanges differ, so ReuseExchange can't
+    # dedupe — without this the declared exact-baseline cosine scan
+    # runs twice per build (r11 review). Same move as the oracle's
+    # MATERIALIZED scored CTE.
+    scored = _cos_top_k(
+        q, c, F.col("neighbor_id") != F.col("query_id"), "neighbor_id", None
+    ).localCheckpoint()
     w_q = Window.partitionBy("query_id").orderBy(
-        F.col("cs").desc(), F.col("neighbor_id")
+        F.col("cos_sim").desc(), F.col("neighbor_id")
     )
     exact = (
         scored.withColumn("rn", F.row_number().over(w_q))
@@ -2340,7 +2173,7 @@ def sim_ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cell_rank") <= F.col("nprobe"))
     )
     w_qn = Window.partitionBy("nprobe", "query_id").orderBy(
-        F.col("cs").desc(), F.col("neighbor_id")
+        F.col("cos_sim").desc(), F.col("neighbor_id")
     )
     ivf_top = (
         cand.withColumn("rn", F.row_number().over(w_qn))

@@ -1784,8 +1784,12 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus.join(probe, "shingle")
         .groupBy("doc_id")
         .agg(
-            F.countDistinct("shingle").cast("long").alias("n_shared_shingles"),
-            F.countDistinct("probe_id").cast("long").alias("n_probe_docs"),
+            # size(collect_set), not countDistinct: two countDistincts
+            # plan an Expand whose key order follows expression ids and
+            # flips between builds of the same code (the rule of
+            # text_tokenize_counts / text_ngram_freq).
+            F.size(F.collect_set("shingle")).cast("long").alias("n_shared_shingles"),
+            F.size(F.collect_set("probe_id")).cast("long").alias("n_probe_docs"),
         )
     )
 
@@ -3441,11 +3445,23 @@ def text_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = docs.filter(~is_batch)
     shb = shingles(batch, 3).select(F.col("doc_id").alias("b_id"), "shingle")
     shc = shingles(corpus, 3).select(F.col("doc_id").alias("c_id"), "shingle")
-    sizes_b = shb.groupBy("b_id").agg(F.count(F.lit(1)).alias("n_b"))
-    sizes_c = shc.groupBy("c_id").agg(F.count(F.lit(1)).alias("n_c"))
     common = shb.join(shc, "shingle").groupBy("b_id", "c_id").agg(
         F.count(F.lit(1)).alias("n_common")
     )
+    return _incremental_verdicts(batch, shb, shc, common)
+
+
+def _incremental_verdicts(
+    batch: DataFrame, shb: DataFrame, shc: DataFrame, common: DataFrame
+) -> DataFrame:
+    """text_dedup_incremental's verdicts from the pair counts onward,
+    shared with its streaming twin stream_incremental_dedup: per batch
+    doc (``batch.doc_id``), the corpus docs at shingle-Jaccard >= 0.5
+    from ``common`` (b_id, c_id, n_common) and the shingle sets
+    ``shb`` (b_id, shingle) / ``shc`` (c_id, shingle); the best match
+    ranks on the raw Jaccard with a c_id tie-break."""
+    sizes_b = shb.groupBy("b_id").agg(F.count(F.lit(1)).alias("n_b"))
+    sizes_c = shc.groupBy("c_id").agg(F.count(F.lit(1)).alias("n_c"))
     jac = F.col("n_common") / (F.col("n_b") + F.col("n_c") - F.col("n_common"))
     m = (
         common.join(sizes_b, "b_id")

@@ -829,9 +829,18 @@ def gate_plan(spark, name: str, sf_dir: str) -> tuple[str, list[str]]:
 
 
 # Numbers a plan's text takes from the session rather than from the
-# query: expression ids (``l_orderkey#1234L``), ``plan_id=``, RDD ids and
-# the per-process scratch directory (``.tmp/s<pid>``).
-_SESSION_NUMBERS = (r"(#)(\d+)", r"(plan_id=)(\d+)", r"(RDD\[)(\d+)", r"(\.tmp/s)(\d+)")
+# query: expression ids (``l_orderkey#1234L``), ``plan_id=``, RDD ids,
+# the per-process scratch directory (``.tmp/s<pid>``) and the suffix of
+# each lambda variable (``lambda x_27``), drawn from a process-wide
+# counter, so a lambda added to one gate renames those of every gate
+# planned after it.
+_SESSION_NUMBERS = (
+    r"(#)(\d+)",
+    r"(plan_id=)(\d+)",
+    r"(RDD\[)(\d+)",
+    r"(\.tmp/s)(\d+)",
+    r"(lambda \w+_)(\d+)\b",
+)
 
 
 def stable_text(txt: str) -> str:

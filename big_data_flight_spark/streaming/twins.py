@@ -24,9 +24,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from big_data_flight_spark.io import fan_out, footer_schema, table, ts_guard
+from big_data_flight_spark.operators.etl import _DRIFT_TV_ORACLE, _drift_tv_finish
 from big_data_flight_spark.operators.events import (
     EWMA_ORACLE,
     SESSION_WINDOW_NATIVE_ORACLE,
+)
+from big_data_flight_spark.operators.text import (
+    _INCR_BATCH_MOD,
+    _INCR_ORACLE,
+    _incremental_verdicts,
+    shingles,
 )
 from big_data_flight_spark.registry import DSUM, dsum, gate_query
 
@@ -256,29 +263,62 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(joined, mode="append")
 
 
-def foreach_batch_sink(spark: SparkSession, sf_dir: str, out_dir: str) -> int:
-    """foreachBatch exactly-once-style sink: each micro-batch is written
-    transactionally (per-epoch parquet dir) — the pattern for sinks
-    without native streaming support. Returns the number of epochs."""
+def _drain_epochs(
+    spark: SparkSession, sf_dir: str, data_dir: str, checkpoint: str
+) -> tuple[int, int]:
+    """Drain the event stream (availableNow) through a foreachBatch sink
+    that commits each micro-batch to ``{data_dir}/epoch={id}`` with
+    overwrite — the pattern for sinks without native streaming support:
+    a replayed epoch OVERWRITES rather than duplicates, so delivery is
+    exactly-once by idempotent epoch commit. Returns (epochs written,
+    input rows read) for this run."""
     epochs: set[int] = set()
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out_dir}/epoch={epoch_id}")
+        batch_df.write.mode("overwrite").parquet(f"{data_dir}/epoch={epoch_id}")
         # a set, not a list: a replayed/retried micro-batch re-invokes
-        # write_batch with the SAME epoch id (that idempotent replay is
-        # the sink's whole design) and must not count twice (r6 review).
+        # write_batch with the SAME epoch id and must not count twice.
         epochs.add(epoch_id)
 
     q = (
         events_stream(spark, sf_dir)
-        .select("event_id", "user_id", "event_type", "value")
+        .select("event_id", "event_type", "value")
         .writeStream.foreachBatch(write_batch)
         .trigger(availableNow=True)
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
+        .option("checkpointLocation", checkpoint)
         .start()
     )
     q.awaitTermination()
-    return len(epochs)
+    return len(epochs), sum(p.numInputRows for p in q.recentProgress)
+
+
+def foreach_batch_sink(spark: SparkSession, sf_dir: str, out_dir: str) -> int:
+    """Drain the event stream into per-epoch parquet dirs under
+    ``out_dir`` (``_drain_epochs``); returns the number of epochs."""
+    return _drain_epochs(spark, sf_dir, out_dir, f"{out_dir}/_checkpoint")[0]
+
+
+# Both epoch-sink gates aggregate the source once: a value match proves
+# the sink delivered each row exactly once.
+_EPOCH_SINK_ORACLE = f"""
+    SELECT event_type, COUNT(*) AS n, {DSUM("value", "sum_value")},
+           CAST(MIN(event_id) AS BIGINT) AS min_id,
+           CAST(MAX(event_id) AS BIGINT) AS max_id
+    FROM events
+    GROUP BY event_type
+    """
+
+
+def _epoch_totals(spark: SparkSession, data_dir: str) -> DataFrame:
+    """Read the union of committed epochs back as a batch table and
+    aggregate it the way ``_EPOCH_SINK_ORACLE`` aggregates the source."""
+    back = spark.read.option("basePath", data_dir).parquet(f"{data_dir}/epoch=*")
+    return back.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"),
+        dsum("value", "sum_value"),
+        F.min("event_id").alias("min_id"),
+        F.max("event_id").alias("max_id"),
+    )
 
 
 def _funnel_fold(pdfs, first_signup, first_purchase):
@@ -584,52 +624,25 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @gate_query(
     "stream_foreach_batch_sink",
-    oracle=f"""
-    SELECT event_type, COUNT(*) AS n, {DSUM("value", "sum_value")},
-           CAST(MIN(event_id) AS BIGINT) AS min_id,
-           CAST(MAX(event_id) AS BIGINT) AS max_id
-    FROM events
-    GROUP BY event_type
-    """,
+    oracle=_EPOCH_SINK_ORACLE,
     tags=("streaming", "sink"),
 )
 def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch transactional sink as a gated round-trip: drain the
-    event stream through per-epoch parquet directories (the pattern
-    for sinks without native streaming support — each micro-batch
-    commits atomically under its epoch id, so a replayed epoch
-    OVERWRITES rather than duplicates: exactly-once by idempotent
-    epoch commit), then read the union of epochs back as a batch table
-    and aggregate. The oracle aggregates the source directly — a value
-    match proves the sink lost nothing and duplicated nothing across
-    epochs. Scratch layout and cleanup follow the connectors-module
-    convention (per-PID dir, wiped per call)."""
+    event stream through per-epoch parquet directories
+    (``_drain_epochs``), then read the union of epochs back as a batch
+    table and aggregate. The oracle aggregates the source directly — a
+    value match proves the sink lost nothing and duplicated nothing
+    across epochs. Scratch layout and cleanup follow the
+    connectors-module convention (per-PID dir, wiped per call)."""
     import shutil as _shutil
 
     from big_data_flight_spark.sources.connectors import _TMP
 
     out = os.path.join(_TMP, "feb_sink")
     _shutil.rmtree(out, ignore_errors=True)
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out}/epoch={epoch_id}")
-
-    q = (
-        events_stream(spark, sf_dir)
-        .select("event_id", "event_type", "value")
-        .writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{out}/_checkpoint")
-        .start()
-    )
-    q.awaitTermination()
-    back = spark.read.option("basePath", out).parquet(f"{out}/epoch=*")
-    return back.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        dsum("value", "sum_value"),
-        F.min("event_id").alias("min_id"),
-        F.max("event_id").alias("max_id"),
-    )
+    foreach_batch_sink(spark, sf_dir, out)
+    return _epoch_totals(spark, out)
 
 
 def _ewma_fold(xs, s0=None):
@@ -850,13 +863,7 @@ def stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @gate_query(
     "stream_checkpoint_recovery",
-    oracle=f"""
-    SELECT event_type, COUNT(*) AS n, {DSUM("value", "sum_value")},
-           CAST(MIN(event_id) AS BIGINT) AS min_id,
-           CAST(MAX(event_id) AS BIGINT) AS max_id
-    FROM events
-    GROUP BY event_type
-    """,
+    oracle=_EPOCH_SINK_ORACLE,
     tags=("streaming", "sink"),
 )
 def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -882,38 +889,15 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = os.path.join(_TMP, "ckpt_recovery")
     _shutil.rmtree(out, ignore_errors=True)
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out}/data/epoch={epoch_id}")
-
-    def run_once() -> int:
-        q = (
-            events_stream(spark, sf_dir)
-            .select("event_id", "event_type", "value")
-            .writeStream.foreachBatch(write_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{out}/_checkpoint")
-            .start()
-        )
-        q.awaitTermination()
-        return sum(p.numInputRows for p in q.recentProgress)
-
-    run_once()
-    replayed = run_once()  # same checkpoint: must be a no-op
+    data, checkpoint = f"{out}/data", f"{out}/_checkpoint"
+    _drain_epochs(spark, sf_dir, data, checkpoint)
+    _, replayed = _drain_epochs(spark, sf_dir, data, checkpoint)  # must be a no-op
     if replayed != 0:
         raise AssertionError(
             f"checkpoint recovery replayed {replayed} rows — restart is "
             "not idempotent"
         )
-    back = spark.read.option("basePath", f"{out}/data").parquet(
-        f"{out}/data/epoch=*"
-    )
-    return back.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        dsum("value", "sum_value"),
-        F.min("event_id").alias("min_id"),
-        F.max("event_id").alias("max_id"),
-    )
+    return _epoch_totals(spark, data)
 
 
 # ---------------------------------------------------------------------------
@@ -1269,7 +1253,7 @@ def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @gate_query(
     "stream_incremental_dedup",
-    oracle=None,  # set below: shares text_dedup_incremental's oracle
+    oracle=_INCR_ORACLE,
     tags=("streaming", "text", "dedup"),
 )
 def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1291,18 +1275,12 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the drain is a foreachBatch upsert and arrivals age out of state
     with a watermark on ingest time (the fixture source carries no
     event time, so this bounded drain stands in for one horizon)."""
-    from big_data_flight_spark.operators.text import (
-        _INCR_BATCH_MOD,
-        _INCR_JACCARD_T,
-        shingles,
-    )
-    from pyspark.sql import Window
-
     is_batch = F.col("doc_id") % _INCR_BATCH_MOD == _INCR_BATCH_MOD - 1
 
     docs_static = fan_out(table(spark, sf_dir, "documents"), "doc_id")
-    corpus = docs_static.filter(~is_batch)
-    shc = shingles(corpus, 3).select(F.col("doc_id").alias("c_id"), "shingle")
+    shc = shingles(docs_static.filter(~is_batch), 3).select(
+        F.col("doc_id").alias("c_id"), "shingle"
+    )
 
     arriving = documents_stream(spark, sf_dir).filter(is_batch).select(
         "doc_id", "text"
@@ -1315,65 +1293,12 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     common = run_to_memory(pair_counts, mode="complete")
 
-    # Batch downstream, identical to text_dedup_incremental from the
-    # pair table onward (sizes/windows are deterministic projections
-    # of static content).
+    # Batch downstream, the batch gate's own code from the pair table
+    # onward (sizes/windows are deterministic projections of static
+    # content).
     batch = docs_static.filter(is_batch)
-    sizes_b = shingles(batch, 3).groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_b")
-    ).withColumnRenamed("doc_id", "b_id")
-    sizes_c = shc.groupBy("c_id").agg(F.count(F.lit(1)).alias("n_c"))
-    jac = F.col("n_common") / (F.col("n_b") + F.col("n_c") - F.col("n_common"))
-    m = (
-        common.join(sizes_b, "b_id")
-        .join(sizes_c, "c_id")
-        .withColumn("j", jac)
-        .filter(F.col("j") >= _INCR_JACCARD_T)
-    )
-    w = Window.partitionBy("b_id").orderBy(F.col("j").desc(), F.col("c_id"))
-    best = (
-        m.withColumn("rn", F.row_number().over(w))
-        .withColumn("nm", F.count(F.lit(1)).over(Window.partitionBy("b_id")))
-        .filter(F.col("rn") == 1)
-        .select("b_id", "c_id", "j", "nm")
-    )
-    return (
-        batch.select("doc_id")
-        .join(best, F.col("doc_id") == F.col("b_id"), "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("nm"), F.lit(0)).cast("long").alias("n_matches"),
-            F.col("c_id").alias("best_match"),
-            F.floor(F.col("j") * 1000000 + 0.5).cast("long").alias(
-                "best_jaccard_micro"
-            ),
-            F.col("c_id").isNull().alias("is_new"),
-        )
-    )
-
-
-def _share_incremental_oracle() -> None:
-    # The decorator registered the gate with oracle=None (twins.py
-    # loads before text.py's constant in some import orders is a
-    # non-issue — text is imported above — but the decorator arg must
-    # be a literal at def time). Re-point the registry entry at the
-    # SHARED oracle so the driver hash-checks the streaming path
-    # against DuckDB exactly as it does the batch gate.
-    from big_data_flight_spark.operators.text import _INCR_ORACLE
-    from big_data_flight_spark.registry import _REGISTRY, GateQuery
-
-    q = _REGISTRY["stream_incremental_dedup"]
-    _REGISTRY["stream_incremental_dedup"] = GateQuery(
-        name=q.name,
-        builder=q.builder,
-        oracle=_INCR_ORACLE,
-        doc=q.doc,
-        tags=q.tags,
-        expected_empty=q.expected_empty,
-    )
-
-
-_share_incremental_oracle()
+    shb_static = shingles(batch, 3).select(F.col("doc_id").alias("b_id"), "shingle")
+    return _incremental_verdicts(batch, shb_static, shc, common)
 
 
 # ---------------------------------------------------------------------------
@@ -1385,7 +1310,7 @@ _share_incremental_oracle()
 
 @gate_query(
     "stream_drift_tv",
-    oracle=None,  # set below: shares dq_drift_tv's oracle
+    oracle=_DRIFT_TV_ORACLE,
     tags=("streaming", "dq"),
 )
 def stream_drift_tv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1405,8 +1330,6 @@ def stream_drift_tv(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle as the batch gate. A conservation self-audit asserts
     the state counts total the source row count — a dropped or
     double-counted micro-batch cannot pass."""
-    from big_data_flight_spark.operators.etl import _drift_tv_finish
-
     # Monitor config: global time/value bounds as O(1) scalars.
     ev_b = table(spark, sf_dir, "events").select(
         F.floor(F.col("value") * 1000000 + 0.5).cast("long").alias("vu"),
@@ -1448,27 +1371,6 @@ def stream_drift_tv(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long").alias("n_b"),
     )
     return _drift_tv_finish(cnt)
-
-
-def _share_drift_oracle() -> None:
-    # Same pattern (and reason) as _share_incremental_oracle above:
-    # the decorator arg must be a literal at def time, so re-point the
-    # registry entry at the batch gate's oracle after import.
-    from big_data_flight_spark.operators.etl import _DRIFT_TV_ORACLE
-    from big_data_flight_spark.registry import _REGISTRY, GateQuery
-
-    q = _REGISTRY["stream_drift_tv"]
-    _REGISTRY["stream_drift_tv"] = GateQuery(
-        name=q.name,
-        builder=q.builder,
-        oracle=_DRIFT_TV_ORACLE,
-        doc=q.doc,
-        tags=q.tags,
-        expected_empty=q.expected_empty,
-    )
-
-
-_share_drift_oracle()
 
 
 # ---------------------------------------------------------------------------

@@ -300,6 +300,62 @@ def test_no_inline_decimal_sum_outside_registry():
     assert not hits, f"inline decimal sums (use registry.dsum): {hits}"
 
 
+def test_cosine_arithmetic_only_in_the_kernel():
+    """similarity.py has one exact-cosine kernel: ``_widen`` is the one
+    float->double widening of a vector (``F.transform(v, lambda x:
+    x.cast("double"))``) and ``_cos`` the one element-wise product of
+    two vectors (``F.zip_with(a, b, lambda x, y: x * y)``, cast or not).
+    Neither may appear anywhere else in the module. The L2 gates'
+    ``(x - y) * (x - y)`` is another metric and does not match."""
+    from tests.conftest import REPO
+
+    def is_cast_of(node, name):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "cast"
+            and node.args
+            and isinstance(node.args[0], ast.Constant)
+            and node.args[0].value == "double"
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == name
+        )
+
+    def is_param(node, name):
+        return (isinstance(node, ast.Name) and node.id == name) or is_cast_of(node, name)
+
+    def is_kernel_copy(node):
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("transform", "zip_with")
+            and node.args
+            and isinstance(node.args[-1], ast.Lambda)
+        ):
+            return False
+        lam = node.args[-1]
+        ps = [a.arg for a in lam.args.args]
+        if node.func.attr == "transform":
+            return len(ps) == 1 and is_cast_of(lam.body, ps[0])
+        body = lam.body
+        return (
+            len(ps) == 2
+            and isinstance(body, ast.BinOp)
+            and isinstance(body.op, ast.Mult)
+            and {p for p in ps if is_param(body.left, p) or is_param(body.right, p)} == set(ps)
+        )
+
+    path = os.path.join(REPO, "big_data_flight_spark", "operators", "similarity.py")
+    with open(path) as fh:
+        tree = ast.parse(fh.read(), path)
+    kernel = set()
+    for fn in tree.body:
+        if isinstance(fn, ast.FunctionDef) and fn.name in ("_widen", "_cos"):
+            kernel |= {id(n) for n in ast.walk(fn)}
+    hits = [n.lineno for n in ast.walk(tree) if id(n) not in kernel and is_kernel_copy(n)]
+    assert not hits, f"cosine arithmetic outside the kernel (use _vectors/_cos): lines {hits}"
+
+
 def test_fan_out_noop_on_multifile_scan(spark, tmp_path):
     """The cluster-scan case, not just a repartitioned frame: a real
     multi-file parquet source already arrives in >= cores/2 splits, so

@@ -8,28 +8,7 @@ from __future__ import annotations
 
 import re
 
-import pytest
-
 from tests.conftest import SF_SMOKE
-
-R9_GATES = (
-    "text_near_dedup_jaccard_sliced",
-    "text_dedup_clusters_sliced",
-    "text_dedup_clusters_lss_sliced",
-    "mm_interleaved_pack",
-    "sim_ivf_pq_persist",
-)
-
-
-@pytest.mark.parametrize("name", R9_GATES)
-def test_r9_gates_are_not_vacuous(spark, name):
-    """The CLAUDE.md probe rule, as a standing tripwire at the smoke
-    SF (compare.py guards sf0.01/sf0.1 via the committed artifacts)."""
-    from big_data_flight_spark.registry import _REGISTRY, _load_all_operator_modules
-
-    _load_all_operator_modules()
-    n = _REGISTRY[name].builder(spark, SF_SMOKE).count()
-    assert n > 0, f"{name} is vacuous at {SF_SMOKE}"
 
 
 def test_sliced_jaccard_is_a_sub_view_of_full(spark):
@@ -200,28 +179,6 @@ def test_sliced_proxy_twins_are_green_in_committed_artifact():
 # ---------------------------------------------------------------------------
 # Session-2 newborns: recursive CTE, SQL UDF, expectation suite, Z-order
 # ---------------------------------------------------------------------------
-
-S2_GATES = (
-    "sql_recursive_cte",
-    "sql_udf",
-    "dq_expectations",
-    "etl_zorder_layout",
-    "agg_listagg",
-    "dq_drift_tv",
-    "stream_drift_tv",
-    "agg_approx_top_k",
-    "fn_collation",
-    "evt_seasonal_anomaly",  # ADVICE r9: cover all ten newborns uniformly
-)
-
-
-@pytest.mark.parametrize("name", S2_GATES)
-def test_s2_gates_are_not_vacuous(spark, name):
-    from big_data_flight_spark.registry import _REGISTRY, _load_all_operator_modules
-
-    _load_all_operator_modules()
-    n = _REGISTRY[name].builder(spark, SF_SMOKE).count()
-    assert n > 0, f"{name} is vacuous at {SF_SMOKE}"
 
 
 def test_recursive_cte_chain_arithmetic(spark):

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from pyspark.sql import functions as F
@@ -53,16 +54,78 @@ def test_exact_dedup_normalizes(spark):
     assert by_copies == [1, 2]  # the two hello-worlds collapse
 
 
-def test_cosine_identical_vectors(spark):
-    from big_data_flight_spark.operators.similarity import _dot, _norm
+def _kernel_cos(spark, pairs):
+    """Score (a, b) float32 vector pairs through the cosine kernel."""
+    from big_data_flight_spark.operators.similarity import _cos, _vectors
 
     df = spark.createDataFrame(
-        [([1.0, 2.0, 3.0], [1.0, 2.0, 3.0])], "a array<float>, b array<float>"
+        [(i, [float(x) for x in a], [float(x) for x in b]) for i, (a, b) in enumerate(pairs)],
+        "id int, a array<float>, b array<float>",
     )
-    (row,) = df.select(
-        (_dot(F.col("a"), F.col("b")) / (_norm(F.col("a")) * _norm(F.col("b")))).alias("cos")
-    ).collect()
-    assert row["cos"] == pytest.approx(1.0, abs=1e-12)
+    sides = _vectors(_vectors(df, "a", "id", "b", emb="a"), "b", "id", "a_v", "a_n", emb="b")
+    return [r["cos"] for r in sides.select("id", _cos("a", "b").alias("cos")).orderBy("id").collect()]
+
+
+def _numpy_left_fold_cos(a, b):
+    a, b = np.asarray(a, np.float64), np.asarray(b, np.float64)
+    dot, na, nb = np.float64(0.0), np.float64(0.0), np.float64(0.0)
+    for x, y in zip(a, b):
+        dot += x * y
+        na += x * x
+        nb += y * y
+    return float(dot / (np.sqrt(na) * np.sqrt(nb)))
+
+
+def test_cosine_identical_vectors(spark):
+    v = np.array([1.0, 2.0, 3.0], np.float32)
+    (cos,) = _kernel_cos(spark, [(v, v)])
+    assert cos == pytest.approx(1.0, abs=1e-12)
+    assert cos.hex() == _numpy_left_fold_cos(v, v).hex()
+
+
+def test_cosine_kernel_is_a_float64_left_fold(spark):
+    """The kernel widens float32 to double once per vector and folds in
+    element order: bit for bit the numpy float64 left fold, which is
+    also what the DuckDB oracles' list_sum computes."""
+    rng = np.random.default_rng(7)
+    pairs = [
+        (rng.standard_normal(64).astype(np.float32), rng.standard_normal(64).astype(np.float32))
+        for _ in range(40)
+    ]
+    got = _kernel_cos(spark, pairs)
+    want = [_numpy_left_fold_cos(a, b) for a, b in pairs]
+    assert [g.hex() for g in got] == [w.hex() for w in want]
+
+
+# The ten gates whose cosine goes through the kernel; multimodal_join
+# reads only the per-vector norm.
+COSINE_GATES = [
+    "sim_cosine_pairs", "sim_topk_neighbors", "sim_ann_lsh", "text_near_dedup_cosine",
+    "sim_knn_classify", "sim_hard_negative_mining", "sim_ann_recall_curve",
+    "sim_rrf_fusion", "sim_ann_ivf", "multimodal_join",
+]
+
+
+def test_cosine_gates_reach_the_kernel(spark, monkeypatch):
+    """Hook both kernel halves and build each cosine gate: every gate
+    projects its vectors through _vectors, and every pair gate scores
+    through _cos."""
+    import big_data_flight_spark.operators.similarity as sim
+    from big_data_flight_spark.registry import _REGISTRY, _load_all_operator_modules
+    from tests.conftest import SF_SMOKE
+
+    _load_all_operator_modules()
+    seen: set[str] = set()
+    for part in ("_vectors", "_cos"):
+        real = getattr(sim, part)
+        monkeypatch.setattr(
+            sim, part, lambda *a, _real=real, _part=part, **k: seen.add(_part) or _real(*a, **k)
+        )
+    for name in COSINE_GATES:
+        seen.clear()
+        _REGISTRY[name].builder(spark, SF_SMOKE)
+        want = {"_vectors"} if name == "multimodal_join" else {"_vectors", "_cos"}
+        assert seen == want, (name, seen)
 
 
 def test_centroid_of_known_vectors(spark):
