@@ -80,40 +80,13 @@ HEADLINE = [
 # builder-inclusive, every run.
 EAGER_BUILDERS = {"stream_source_sink"}
 
-# Committed best-known per-query mins (sec) — the quiet-window records
-# from BASELINE.md round-4 sessions 2-3 on the current fixture
-# generation (sum ≈ 5.8 s, the demonstrated steady state). These are
-# the stall-detection reference for the retry pass below (VERDICT r4
-# "What's wrong" #1): a min-of-N that lands >25% above its committed
-# best is, on this box, far more likely a stall-wave residue than a
-# plan regression — every r4 regression that was chased dissolved in
-# a quiet window while genuinely rewritten queries improved even in
-# noisy ones. Records may TIGHTEN (lower) from any regime — a stall
-# can only inflate a min, never manufacture a faster one — but must
-# never be RAISED except from a probe-confirmed quiet window.
-# r5 updates: tokenize 0.188->0.155 + ngram 0.184->0.159 (collect_set
-# doc-frequency rewrites), stream 0.585->0.501, q8 0.241->0.237,
-# mm_dedup 0.070->0.068 (achieved in the r5 protocol run).
-# r6 update: 15 records ratcheted down from a probe-confirmed QUIET
-# protocol run (total 5.296, noise_suspected []) — records only
-# ratchet DOWN, and only from quiet windows.
-# r9 update: 4 records ratcheted from the round's best QUIET protocol
-# run (total 5.539, noise_suspected []): agg_groupby 0.537->0.530,
-# text_tokenize_counts 0.139->0.135, join_broadcast 0.210->0.209,
-# join_inner_equi 0.293->0.286.
-# r12 update — the CODIFIED FALLBACK RATCHET (VERDICT r11 #2; third
-# consecutive round with zero probe-QUIET windows): a record may move
-# DOWN to the min across >=3 independent same-session protocol
-# windows (each itself a min-of-N, windows separated by fresh
-# processes) when that min beats the record by >10%; timing noise on
-# this box is one-sided (stalls inflate, never deflate), so an
-# observed min is an achieved run, and the >=3-window + >10% margin
-# guards against ratcheting on a single lucky scheduling fluke.
-# Quiet-window ratchets remain preferred when a quiet window lands.
-# Applied r12 (four windows: 5.524/5.537/5.956/5.643 totals):
-# text_near_dedup_jaccard 0.460->0.394 (readings 0.456/0.394/0.398/
-# 0.424 — the r10 explode-first win, now thrice-confirmed),
-# sim_cosine_pairs 0.464->0.413. All other mins sat above record.
+# Committed best-known per-query mins (sec): the stall-detection
+# reference for the retry pass below. A min-of-N more than 25% above its
+# record is, on a box with CPU-stall waves, far more likely stall
+# residue than a plan regression. Records only ratchet down: from a
+# probe-confirmed quiet window, or to the min across >=3 independent
+# same-session protocol windows when it beats the record by >10%
+# (stalls inflate a min, never deflate it). History: CHANGES.md.
 BEST_KNOWN = {
     "agg_groupby": 0.530,
     "tpch_q5": 0.219,
@@ -127,9 +100,6 @@ BEST_KNOWN = {
     "evt_tumbling_window": 0.126,
     "evt_sessionize_stats": 0.131,
     "text_tokenize_counts": 0.135,
-    # r10: explode-first shingles() (InferFiltersFromGenerate fix)
-    # took the measured min 0.887 -> 0.460 even in a NOISY window;
-    # r12 fallback-ratchet to 0.394 (see r12 note above).
     "text_near_dedup_jaccard": 0.394,
     "sim_cosine_pairs": 0.413,  # r10 min 0.464; r12 fallback-ratchet
     "limit_topk": 0.049,

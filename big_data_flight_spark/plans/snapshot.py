@@ -844,9 +844,12 @@ _SESSION_NUMBERS = (
 
 
 def stable_text(txt: str) -> str:
-    """``txt`` with each session-assigned number renumbered 1, 2, ... in
-    order of first appearance, so that PLANS.md diffs only where a plan
-    changed. Property checks read the raw text."""
+    """``txt`` with the checkout path replaced by ``<repo>`` and each
+    session-assigned number renumbered 1, 2, ... in order of first
+    appearance, so that PLANS.md diffs only where a plan changed and
+    reads the same from any checkout. Property checks read the raw
+    text."""
+    txt = txt.replace(REPO, "<repo>")
     for pattern in _SESSION_NUMBERS:
         ids: dict[str, int] = {}
         txt = re.sub(

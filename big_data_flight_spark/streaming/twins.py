@@ -33,6 +33,7 @@ from big_data_flight_spark.operators.text import (
     _INCR_BATCH_MOD,
     _INCR_ORACLE,
     _incremental_verdicts,
+    shingle_jaccard,
     shingles,
 )
 from big_data_flight_spark.registry import DSUM, dsum, gate_query
@@ -1262,12 +1263,14 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch's shingles join the STATIC corpus inverted index
     (stream-static join, the standing-index pattern), and the
     streaming side aggregates the per-(arrival, corpus-doc) common-
-    shingle counts. Counting is arrival-order-insensitive, so after
-    the availableNow drain the pair table equals the batch gate's —
-    the downstream verdict computation (Jaccard, best match, is_new)
-    runs batch-side on the drained counts and the gate shares the
-    batch gate's ORACLE VERBATIM (module constant _INCR_ORACLE):
-    a strong cross-engine check of the whole streaming path.
+    shingle counts and scores them: shingle_jaccard with the stream as
+    its ``probe`` and the static batch shingles as the size source.
+    Counting is arrival-order-insensitive, so after the availableNow
+    drain the scored pair table equals the batch gate's; the verdicts
+    (best match, is_new) run batch-side on the drained rows, and the
+    gate shares the batch gate's ORACLE VERBATIM (module constant
+    _INCR_ORACLE): a strong cross-engine check of the whole streaming
+    path.
 
     State story at scale: the streaming aggregation keys on
     (arriving doc, matched corpus doc) — bounded by the index
@@ -1278,27 +1281,18 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_batch = F.col("doc_id") % _INCR_BATCH_MOD == _INCR_BATCH_MOD - 1
 
     docs_static = fan_out(table(spark, sf_dir, "documents"), "doc_id")
-    shc = shingles(docs_static.filter(~is_batch), 3).select(
-        F.col("doc_id").alias("c_id"), "shingle"
-    )
-
-    arriving = documents_stream(spark, sf_dir).filter(is_batch).select(
-        "doc_id", "text"
-    )
-    shb = shingles(arriving, 3).select(F.col("doc_id").alias("b_id"), "shingle")
-    pair_counts = (
-        shb.join(shc, "shingle")
-        .groupBy("b_id", "c_id")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    common = run_to_memory(pair_counts, mode="complete")
-
-    # Batch downstream, the batch gate's own code from the pair table
-    # onward (sizes/windows are deterministic projections of static
-    # content).
     batch = docs_static.filter(is_batch)
-    shb_static = shingles(batch, 3).select(F.col("doc_id").alias("b_id"), "shingle")
-    return _incremental_verdicts(batch, shb_static, shc, common)
+
+    def shingled(d: DataFrame, key: str) -> DataFrame:
+        return shingles(d, 3).select(F.col("doc_id").alias(key), "shingle")
+
+    arriving = documents_stream(spark, sf_dir).filter(is_batch).select("doc_id", "text")
+    scored = shingle_jaccard(
+        shingled(batch, "b_id"),
+        shingled(docs_static.filter(~is_batch), "c_id"),
+        probe=shingled(arriving, "b_id"),
+    )
+    return _incremental_verdicts(batch, run_to_memory(scored, mode="complete"))
 
 
 # ---------------------------------------------------------------------------

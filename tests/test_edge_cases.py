@@ -96,11 +96,11 @@ def test_frequency_cap_keeps_planted_near_dups(spark):
 
     docs = table(spark, SF_SMOKE, "documents")
     uncapped = {
-        (r["doc_a"], r["doc_b"]) for r in near_dup_pairs(docs, 0.5).collect()
+        (r["doc_a"], r["doc_b"]) for r in near_dup_pairs(shingles(docs, 3), 0.5).collect()
     }
     capped = {
         (r["doc_a"], r["doc_b"])
-        for r in near_dup_pairs(docs, 0.5, max_doc_freq=10).collect()
+        for r in near_dup_pairs(shingles(docs, 3), 0.5, max_doc_freq=10).collect()
     }
     assert uncapped  # fixtures plant near-dups
     assert uncapped == capped
@@ -142,7 +142,7 @@ def test_frequency_cap_drops_hot_shingles_and_audits(spark):
     rows += [(i, f"aa bb cc u{i} v{i} w{i}") for i in range(2, 30)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     out = near_dup_pairs(
-        docs, threshold=0.3, max_doc_freq=8, audit_dropped=True
+        shingles(docs, 3), threshold=0.3, max_doc_freq=8, audit_dropped=True
     ).collect()
     assert out, "rare-shingle near-dup pair must survive the cap"
     pair = next(r for r in out if (r["doc_a"], r["doc_b"]) == (0, 1))
@@ -354,6 +354,43 @@ def test_cosine_arithmetic_only_in_the_kernel():
             kernel |= {id(n) for n in ast.walk(fn)}
     hits = [n.lineno for n in ast.walk(tree) if id(n) not in kernel and is_kernel_copy(n)]
     assert not hits, f"cosine arithmetic outside the kernel (use _vectors/_cos): lines {hits}"
+
+
+def test_jaccard_ratio_only_in_the_kernel():
+    """The exact shingle-Jaccard ratio n_common / (n_a + n_b - n_common)
+    (a division whose denominator subtracts its numerator) is spelled
+    once under operators/ and streaming/: inside text.shingle_jaccard.
+    Every gate filters, ranks and displays the kernel's ``j``."""
+    from tests.conftest import REPO
+
+    def is_ratio(node):
+        if not (isinstance(node, ast.BinOp) and isinstance(node.op, ast.Div)):
+            return False
+        num = ast.dump(node.left)
+        return any(
+            isinstance(n, ast.BinOp) and isinstance(n.op, ast.Sub) and ast.dump(n.right) == num
+            for n in ast.walk(node.right)
+        )
+
+    pkg = os.path.join(REPO, "big_data_flight_spark")
+    hits = []
+    for sub in ("operators", "streaming"):
+        for fname in sorted(os.listdir(os.path.join(pkg, sub))):
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(pkg, sub, fname)
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            kernel = set()
+            for fn in tree.body:
+                if isinstance(fn, ast.FunctionDef) and fn.name == "shingle_jaccard":
+                    kernel |= {id(n) for n in ast.walk(fn)}
+            hits += [
+                f"{sub}/{fname}:{n.lineno}"
+                for n in ast.walk(tree)
+                if id(n) not in kernel and is_ratio(n)
+            ]
+    assert not hits, f"Jaccard ratio outside text.shingle_jaccard: {hits}"
 
 
 def test_fan_out_noop_on_multifile_scan(spark, tmp_path):

@@ -123,6 +123,17 @@ def test_check_reads_snapshot_properties():
     ]
 
 
+def test_stable_text_hides_the_checkout_path():
+    """A scratch table's location reads the same from any checkout and
+    any process: the checkout path becomes ``<repo>`` and the
+    per-process directory is renumbered."""
+    from big_data_flight_spark.plans.snapshot import REPO, stable_text
+
+    line = "Location: InMemoryFileIndex [file:{}/.tmp/s{}/sorted_events]"
+    want = "Location: InMemoryFileIndex [file:<repo>/.tmp/s1/sorted_events]"
+    assert stable_text(line.format(REPO, 4242)) == stable_text(line.format(REPO, 77)) == want
+
+
 def _gate_plan_text(spark, name: str) -> str:
     from big_data_flight_spark.registry import _REGISTRY, _load_all_operator_modules
 

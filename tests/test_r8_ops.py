@@ -215,37 +215,6 @@ def test_hard_negative_mining_against_numpy(spark):
         assert top1["neg_id"] == scored[0][1], (aid, top1, scored[:2])
 
 
-def test_incremental_dedup_consistency(spark):
-    """One row per batch doc; is_new <=> no best_match; matched docs
-    carry a Jaccard >= threshold in micro-units; the best match is
-    always a CORPUS doc (never another batch arrival); and the match
-    path is exercised (measured: 9 matched batch docs at sf0.001)."""
-    from big_data_flight_spark.io import table
-    from big_data_flight_spark.operators.text import (
-        _INCR_BATCH_MOD,
-        _INCR_JACCARD_T,
-        text_dedup_incremental,
-    )
-
-    rows = text_dedup_incremental(spark, SF_SMOKE).collect()
-    n_batch = (
-        table(spark, SF_SMOKE, "documents")
-        .filter(f"doc_id % {_INCR_BATCH_MOD} = {_INCR_BATCH_MOD - 1}")
-        .count()
-    )
-    assert len(rows) == n_batch
-    n_matched = 0
-    for r in rows:
-        if r["is_new"]:
-            assert r["best_match"] is None and r["n_matches"] == 0
-        else:
-            n_matched += 1
-            assert r["n_matches"] > 0
-            assert r["best_match"] % _INCR_BATCH_MOD != _INCR_BATCH_MOD - 1
-            assert r["best_jaccard_micro"] >= int(_INCR_JACCARD_T * 1_000_000)
-    assert 0 < n_matched < n_batch  # both verdicts exercised
-
-
 def test_asof_tolerance_consistent_with_base_asof(spark):
     """Tolerance variant vs the base as-of join: every in-tolerance
     match must equal the base join's pick for that purchase (the
@@ -385,33 +354,6 @@ def test_bpe_roundtrip_is_lossless_for_every_doc(spark):
     enc = {r["doc_id"]: r["n_tokens"] for r in text_bpe_encode(spark, SF_SMOKE).collect()}
     for r in rows:
         assert r["n_tokens"] == enc[r["doc_id"]]
-
-
-def test_stream_incremental_dedup_equals_batch(spark):
-    """The streaming ingest path must produce row-for-row the batch
-    gate's verdicts (counting is arrival-order-insensitive; everything
-    downstream is a deterministic projection of static content)."""
-    from big_data_flight_spark.operators.text import text_dedup_incremental
-    from big_data_flight_spark.streaming.twins import stream_incremental_dedup
-
-    batch = sorted(
-        tuple(r) for r in text_dedup_incremental(spark, SF_SMOKE).collect()
-    )
-    streamed = sorted(
-        tuple(r) for r in stream_incremental_dedup(spark, SF_SMOKE).collect()
-    )
-    assert streamed == batch and len(batch) > 0
-
-
-def test_stream_incremental_dedup_shares_the_batch_oracle():
-    """The registry entry must carry text_dedup_incremental's oracle
-    VERBATIM (same string object semantics: one definition, two
-    consumers) so the driver hash-checks the streaming path strongly."""
-    from big_data_flight_spark.operators.text import _INCR_ORACLE
-
-    _load_all_operator_modules()
-    assert _REGISTRY["stream_incremental_dedup"].oracle == _INCR_ORACLE
-    assert _REGISTRY["text_dedup_incremental"].oracle == _INCR_ORACLE
 
 
 def test_hll_sliding_union_tracks_exact(spark):
@@ -564,70 +506,6 @@ def test_parameterized_sql_binds_and_pushes_down(spark):
         ).collect()
     )
     assert got == want and len(got) > 0
-
-
-def test_incremental_dedup_planted_duplicates(spark, tmp_path):
-    """Fixture-independent semantics check: plant KNOWN duplicates
-    across the batch/corpus boundary in a synthetic documents table
-    and assert the gate finds exactly them. Construction: corpus doc
-    4k+0 and batch doc 5j+4 share a long text (jaccard 1.0 on shingle
-    sets) for three planted pairs; one batch doc is unique prose; one
-    batch doc half-overlaps a corpus doc below the 0.5 threshold."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from big_data_flight_spark.operators.text import text_dedup_incremental
-
-    base = [
-        "alpha beta gamma delta epsilon zeta eta theta iota kappa "
-        "lambda mu nu xi omicron pi rho sigma tau upsilon",
-        "one two three four five six seven eight nine ten eleven "
-        "twelve thirteen fourteen fifteen sixteen seventeen eighteen",
-        "red orange yellow green blue indigo violet crimson scarlet "
-        "amber gold silver bronze copper iron steel titanium zinc",
-    ]
-    rows = []  # (doc_id, text); batch = doc_id % 5 == 4
-    # planted exact near-dups: corpus holds base[i] at doc_id 10*i,
-    # batch holds the SAME text at doc_id 5*(2*i+1)+4
-    expected = {}
-    for i, t in enumerate(base):
-        c_id = 10 * i  # 10*i % 5 == 0, so always corpus-side (ADVICE r8)
-        assert c_id % 5 != 4
-        b_id = 5 * (2 * i + 1) + 4
-        rows.append((c_id, t))
-        rows.append((b_id, t))
-        expected[b_id] = c_id
-    # a unique batch arrival
-    rows.append((99, "totally novel content about nothing shared with anyone "
-                     "in particular whatsoever uniquely phrased sentence here"))
-    # a below-threshold batch arrival (shares a prefix of base[0] only)
-    rows.append((54, "alpha beta gamma delta epsilon completely different "
-                     "ending with many many extra unshared trailing words "
-                     "padding padding padding padding padding padding"))
-    # corpus filler so sizes exist
-    rows.append((1, "filler corpus document with plain words and no overlap "
-                    "to any planted arrival beyond stopword level tokens"))
-    tbl = pa.table({
-        "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-        "text": pa.array([r[1] for r in rows], pa.string()),
-        "lang": pa.array(["en"] * len(rows), pa.string()),
-        "source": pa.array(["synthetic"] * len(rows), pa.string()),
-        "n_chars": pa.array([len(r[1]) for r in rows], pa.int64()),
-    })
-    pq.write_table(tbl, f"{tmp_path}/documents.parquet")
-
-    got = {
-        r["doc_id"]: r
-        for r in text_dedup_incremental(spark, str(tmp_path)).collect()
-    }
-    batch_ids = {r[0] for r in rows if r[0] % 5 == 4}
-    assert set(got) == batch_ids
-    for b_id, c_id in expected.items():
-        r = got[b_id]
-        assert not r["is_new"] and r["best_match"] == c_id, r
-        assert r["best_jaccard_micro"] == 1_000_000, r  # identical text
-    assert got[99]["is_new"] and got[99]["n_matches"] == 0
-    assert got[54]["is_new"], got[54]  # overlap stays below 0.5
 
 
 @pytest.mark.parametrize(

@@ -7,6 +7,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_SMOKE
+
 
 def _docs(spark, texts):
     return spark.createDataFrame(
@@ -38,6 +40,368 @@ def test_jaccard_detects_planted_near_dup(spark):
         text_mod.table = orig
     assert [(r["doc_a"], r["doc_b"]) for r in pairs] == [(0, 1)]
     assert pairs[0]["jaccard"] > 0.5
+
+
+# ---------------------------------------------------------------------------
+# Exact shingle-Jaccard family: the kernel, the pair gates, the capped
+# and adaptive caps, the sliced twins and the incremental gates.
+# ---------------------------------------------------------------------------
+
+
+def test_shingle_jaccard_matches_set_arithmetic(spark):
+    """The kernel's forms against Python set arithmetic on inline
+    (id, shingle) relations: the self-join (each unordered pair once,
+    doc_a < doc_b), a stop set (counts drop, sizes stay uncapped),
+    candidate pairs, and two relations with and without a probe. j is
+    the IEEE quotient of the two integers."""
+    from big_data_flight_spark.operators.text import shingle_jaccard
+
+    sets = {0: {"a", "b", "c", "d"}, 1: {"a", "b", "c", "e"}, 2: {"c", "x"}, 3: {"y"}}
+    sh = spark.createDataFrame(
+        [(d, s) for d, ss in sets.items() for s in sorted(ss)], "doc_id long, shingle string"
+    )
+
+    def want(pairs, stop=frozenset()):
+        out = {}
+        for a, b in pairs:
+            n = len((sets[a] & sets[b]) - stop)
+            if n:
+                na, nb = len(sets[a]), len(sets[b])
+                out[(a, b)] = (n, na, nb, n / (na + nb - n))
+        return out
+
+    def got(df, ida="doc_a", idb="doc_b"):
+        return {(r[ida], r[idb]): (r["n_common"], r["n_a"], r["n_b"], r["j"]) for r in df.collect()}
+
+    every = [(a, b) for a in sets for b in sets if a < b]
+    assert got(shingle_jaccard(sh)) == want(every)
+    stop = spark.createDataFrame([("c",)], "shingle string")
+    assert got(shingle_jaccard(sh, stop=stop)) == want(every, frozenset({"c"}))
+    cands = spark.createDataFrame([(0, 1), (1, 2)], "doc_a long, doc_b long")
+    assert got(shingle_jaccard(sh, candidates=cands)) == want([(0, 1), (1, 2)])
+    b = sh.filter("doc_id < 2").withColumnRenamed("doc_id", "b_id")
+    c = sh.filter("doc_id >= 2").withColumnRenamed("doc_id", "c_id")
+    cross = want([(x, y) for x in (0, 1) for y in (2, 3)])
+    assert got(shingle_jaccard(b, c), "b_id", "c_id") == cross
+    probed = shingle_jaccard(b, c, probe=b.filter("b_id = 0"))
+    assert got(probed, "b_id", "c_id") == {k: v for k, v in cross.items() if k[0] == 0}
+
+
+# The gates whose shingle overlaps are counted by text.shingle_jaccard.
+JACCARD_GATES = [
+    "text_near_dedup_jaccard", "text_near_dedup_jaccard_capped",
+    "text_near_dedup_jaccard_adaptive", "text_near_dedup_jaccard_sliced",
+    "text_dedup_clusters", "text_dedup_clusters_lss", "text_dedup_clusters_sliced",
+    "text_dedup_clusters_lss_sliced", "text_minhash_mllib", "text_minhash_lsh",
+    "text_dedup_incremental", "stream_incremental_dedup",
+]
+
+
+def test_jaccard_gates_reach_the_kernel(spark, monkeypatch):
+    """Hook shingle_jaccard in every module that reads it and build each
+    near-dup gate: every one counts its overlaps through the kernel."""
+    import big_data_flight_spark.operators.sketches as sketches
+    import big_data_flight_spark.operators.text as text
+    import big_data_flight_spark.streaming.twins as twins
+    from big_data_flight_spark.registry import _REGISTRY, _load_all_operator_modules
+
+    _load_all_operator_modules()
+    calls = []
+    real = text.shingle_jaccard
+    for mod in (text, sketches, twins):
+        monkeypatch.setattr(mod, "shingle_jaccard", lambda *a, **k: calls.append(1) or real(*a, **k))
+    for name in JACCARD_GATES:
+        calls.clear()
+        _REGISTRY[name].builder(spark, SF_SMOKE)
+        assert calls, f"{name} does not reach shingle_jaccard"
+
+
+def test_near_dup_oracles_share_one_shingle_fragment():
+    """Every near-dup oracle (and the two sketch oracles) builds its
+    shingles from text.SQL_SHINGLES, the one place the DuckDB shingle
+    list is spelled."""
+    import glob
+
+    from big_data_flight_spark.operators.text import SQL_SHINGLES
+    from big_data_flight_spark.registry import _REGISTRY, _load_all_operator_modules
+    from tests.conftest import REPO
+
+    _load_all_operator_modules()
+    for name in JACCARD_GATES + ["text_simhash_dedup", "text_split_leakage_simhash"]:
+        assert SQL_SHINGLES in _REGISTRY[name].oracle, name
+    spelled = 0
+    for path in glob.glob(f"{REPO}/big_data_flight_spark/**/*.py", recursive=True):
+        with open(path) as fh:
+            spelled += fh.read().count("w[i] || ' ' || w[i+1]")
+    assert spelled == 1
+
+
+@pytest.fixture(scope="module")
+def adaptive_rows(spark):
+    """text_near_dedup_jaccard_adaptive's rows at sf0.001, computed once
+    per module: each run is a full shingle-explode + df-groupBy +
+    pair-join."""
+    from big_data_flight_spark.registry import _REGISTRY, _load_all_operator_modules
+
+    _load_all_operator_modules()
+    rows = _REGISTRY["text_near_dedup_jaccard_adaptive"].builder(
+        spark, SF_SMOKE
+    ).collect()
+    assert rows, "gate must be non-vacuous at sf0.001 (probed 28 rows)"
+    return rows
+
+
+@pytest.fixture(scope="module")
+def python_shingle_dfs(spark):
+    """Independent df multiset: 3-word distinct shingles per doc via
+    plain Python string ops (no reuse of the gate's shingles())."""
+    from collections import Counter
+
+    from big_data_flight_spark.io import table
+
+    docs = table(spark, SF_SMOKE, "documents").select("doc_id", "text").collect()
+    df_counter = Counter()
+    for r in docs:
+        w = r["text"].lower().split(" ")
+        sh = {" ".join(w[i : i + 3]) for i in range(len(w) - 2)}
+        df_counter.update(sh)
+    return df_counter
+
+
+def _type1_quantile(sorted_vals, q):
+    """min x with rank(x) >= ceil(q*n) over the sorted multiset."""
+    import math
+
+    n = len(sorted_vals)
+    return sorted_vals[math.ceil(q * n) - 1]
+
+
+def test_adaptive_cap_quantiles_match_independent_python(
+    adaptive_rows, python_shingle_dfs
+):
+    """(median_df, p90_df, chosen_cap) must equal type-1 quantiles of
+    the shingle-df distribution recomputed from scratch in Python,
+    with cap = _ADAPTIVE_TARGET_DUP x median."""
+    from big_data_flight_spark.operators.text import _ADAPTIVE_TARGET_DUP
+
+    dfs = sorted(python_shingle_dfs.values())
+    med = _type1_quantile(dfs, 0.5)
+    p90 = _type1_quantile(dfs, 0.9)
+    caps = {(r["chosen_cap"], r["median_df"], r["p90_df"]) for r in adaptive_rows}
+    assert caps == {(med * _ADAPTIVE_TARGET_DUP, med, p90)}, (
+        f"gate {caps} vs python (cap={med * _ADAPTIVE_TARGET_DUP}, "
+        f"median={med}, p90={p90})"
+    )
+
+
+def test_adaptive_cap_bite_accounting(adaptive_rows, python_shingle_dfs):
+    """dropped_shingles must equal the exact count of distinct
+    shingles with df > chosen_cap — and at sf0.001 the cap genuinely
+    BITES (>=1 dropped), so the drop path is exercised, not dormant."""
+    cap = adaptive_rows[0]["chosen_cap"]
+    expected_dropped = sum(1 for df in python_shingle_dfs.values() if df > cap)
+    assert expected_dropped >= 1, "fixture regression: cap no longer bites"
+    assert {r["dropped_shingles"] for r in adaptive_rows} == {expected_dropped}
+
+
+def test_adaptive_pairs_are_capped_lower_bounds_of_uncapped(spark, adaptive_rows):
+    """Every adaptive pair must appear in the uncapped gate's pair set
+    with jaccard >= the capped value (denominators keep true set
+    sizes, so dropping stop-shingles can only shrink the numerator),
+    and any uncapped pair MISSING from the adaptive output must have
+    fallen below threshold for that reason — i.e. the capped set is a
+    subset, never an invention."""
+    from big_data_flight_spark.registry import _REGISTRY
+
+    adaptive = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in adaptive_rows}
+    uncapped = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in _REGISTRY["text_near_dedup_jaccard"]
+        .builder(spark, SF_SMOKE)
+        .collect()
+    }
+    assert set(adaptive) <= set(uncapped)
+    for pair, j in adaptive.items():
+        assert uncapped[pair] >= j - 1e-9, (pair, j, uncapped[pair])
+
+
+def test_sliced_jaccard_is_a_sub_view_of_full(spark):
+    """Every sliced pair appears in the full gate's pair set with the
+    IDENTICAL jaccard value, and both members of every sliced pair are
+    slice docs — the slice restricts, never invents or re-scores."""
+    from big_data_flight_spark.operators.text import (
+        _sliced_docs,
+        text_near_dedup_jaccard,
+        text_near_dedup_jaccard_sliced,
+    )
+
+    full = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in text_near_dedup_jaccard(spark, SF_SMOKE).collect()
+    }
+    sliced = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in text_near_dedup_jaccard_sliced(spark, SF_SMOKE).collect()
+    }
+    assert sliced  # non-vacuous by the _SLICE_MOD=8 measurement
+    slice_ids = {
+        r["doc_id"] for r in _sliced_docs(spark, SF_SMOKE).select("doc_id").collect()
+    }
+    for (a, b), j in sliced.items():
+        assert full.get((a, b)) == j, (a, b)
+        assert a in slice_ids and b in slice_ids
+    # and completeness: every full pair with BOTH ends in the slice
+    # must survive into the sliced gate
+    expected = {p for p in full if p[0] in slice_ids and p[1] in slice_ids}
+    assert set(sliced) == expected
+
+
+def test_sliced_cluster_twins_agree_and_match_full_restriction(spark):
+    """The two sliced cluster gates (propagation vs LSS) must produce
+    the identical labeling — they share one oracle — and each slice
+    doc's in_cluster flag must reflect the sliced pair graph."""
+    from big_data_flight_spark.operators.text import (
+        text_dedup_clusters_lss_sliced,
+        text_dedup_clusters_sliced,
+        text_near_dedup_jaccard_sliced,
+    )
+
+    prop = sorted(
+        tuple(r) for r in text_dedup_clusters_sliced(spark, SF_SMOKE).collect()
+    )
+    lss = sorted(
+        tuple(r) for r in text_dedup_clusters_lss_sliced(spark, SF_SMOKE).collect()
+    )
+    assert prop == lss and len(prop) > 0
+    touched = set()
+    for r in text_near_dedup_jaccard_sliced(spark, SF_SMOKE).collect():
+        touched.add(r["doc_a"])
+        touched.add(r["doc_b"])
+    got_in_cluster = {doc for doc, _cid, in_c in prop if in_c}
+    assert got_in_cluster == touched
+
+
+def test_incremental_dedup_consistency(spark):
+    """One row per batch doc; is_new <=> no best_match; matched docs
+    carry a Jaccard >= threshold in micro-units; the best match is
+    always a CORPUS doc (never another batch arrival); and the match
+    path is exercised (measured: 9 matched batch docs at sf0.001)."""
+    from big_data_flight_spark.io import table
+    from big_data_flight_spark.operators.text import (
+        _INCR_BATCH_MOD,
+        JACCARD_T,
+        text_dedup_incremental,
+    )
+
+    rows = text_dedup_incremental(spark, SF_SMOKE).collect()
+    n_batch = (
+        table(spark, SF_SMOKE, "documents")
+        .filter(f"doc_id % {_INCR_BATCH_MOD} = {_INCR_BATCH_MOD - 1}")
+        .count()
+    )
+    assert len(rows) == n_batch
+    n_matched = 0
+    for r in rows:
+        if r["is_new"]:
+            assert r["best_match"] is None and r["n_matches"] == 0
+        else:
+            n_matched += 1
+            assert r["n_matches"] > 0
+            assert r["best_match"] % _INCR_BATCH_MOD != _INCR_BATCH_MOD - 1
+            assert r["best_jaccard_micro"] >= int(JACCARD_T * 1_000_000)
+    assert 0 < n_matched < n_batch  # both verdicts exercised
+
+
+def test_incremental_dedup_planted_duplicates(spark, tmp_path):
+    """Fixture-independent semantics check: plant KNOWN duplicates
+    across the batch/corpus boundary in a synthetic documents table
+    and assert the gate finds exactly them. Construction: corpus doc
+    4k+0 and batch doc 5j+4 share a long text (jaccard 1.0 on shingle
+    sets) for three planted pairs; one batch doc is unique prose; one
+    batch doc half-overlaps a corpus doc below the 0.5 threshold."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from big_data_flight_spark.operators.text import text_dedup_incremental
+
+    base = [
+        "alpha beta gamma delta epsilon zeta eta theta iota kappa "
+        "lambda mu nu xi omicron pi rho sigma tau upsilon",
+        "one two three four five six seven eight nine ten eleven "
+        "twelve thirteen fourteen fifteen sixteen seventeen eighteen",
+        "red orange yellow green blue indigo violet crimson scarlet "
+        "amber gold silver bronze copper iron steel titanium zinc",
+    ]
+    rows = []  # (doc_id, text); batch = doc_id % 5 == 4
+    # planted exact near-dups: corpus holds base[i] at doc_id 10*i,
+    # batch holds the SAME text at doc_id 5*(2*i+1)+4
+    expected = {}
+    for i, t in enumerate(base):
+        c_id = 10 * i  # 10*i % 5 == 0, so always corpus-side (ADVICE r8)
+        assert c_id % 5 != 4
+        b_id = 5 * (2 * i + 1) + 4
+        rows.append((c_id, t))
+        rows.append((b_id, t))
+        expected[b_id] = c_id
+    # a unique batch arrival
+    rows.append((99, "totally novel content about nothing shared with anyone "
+                     "in particular whatsoever uniquely phrased sentence here"))
+    # a below-threshold batch arrival (shares a prefix of base[0] only)
+    rows.append((54, "alpha beta gamma delta epsilon completely different "
+                     "ending with many many extra unshared trailing words "
+                     "padding padding padding padding padding padding"))
+    # corpus filler so sizes exist
+    rows.append((1, "filler corpus document with plain words and no overlap "
+                    "to any planted arrival beyond stopword level tokens"))
+    tbl = pa.table({
+        "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+        "text": pa.array([r[1] for r in rows], pa.string()),
+        "lang": pa.array(["en"] * len(rows), pa.string()),
+        "source": pa.array(["synthetic"] * len(rows), pa.string()),
+        "n_chars": pa.array([len(r[1]) for r in rows], pa.int64()),
+    })
+    pq.write_table(tbl, f"{tmp_path}/documents.parquet")
+
+    got = {
+        r["doc_id"]: r
+        for r in text_dedup_incremental(spark, str(tmp_path)).collect()
+    }
+    batch_ids = {r[0] for r in rows if r[0] % 5 == 4}
+    assert set(got) == batch_ids
+    for b_id, c_id in expected.items():
+        r = got[b_id]
+        assert not r["is_new"] and r["best_match"] == c_id, r
+        assert r["best_jaccard_micro"] == 1_000_000, r  # identical text
+    assert got[99]["is_new"] and got[99]["n_matches"] == 0
+    assert got[54]["is_new"], got[54]  # overlap stays below 0.5
+
+
+def test_stream_incremental_dedup_equals_batch(spark):
+    """The streaming ingest path must produce row-for-row the batch
+    gate's verdicts (counting is arrival-order-insensitive; everything
+    downstream is a deterministic projection of static content)."""
+    from big_data_flight_spark.operators.text import text_dedup_incremental
+    from big_data_flight_spark.streaming.twins import stream_incremental_dedup
+
+    batch = sorted(
+        tuple(r) for r in text_dedup_incremental(spark, SF_SMOKE).collect()
+    )
+    streamed = sorted(
+        tuple(r) for r in stream_incremental_dedup(spark, SF_SMOKE).collect()
+    )
+    assert streamed == batch and len(batch) > 0
+
+
+def test_stream_incremental_dedup_shares_the_batch_oracle():
+    """The registry entry must carry text_dedup_incremental's oracle
+    VERBATIM (same string object semantics: one definition, two
+    consumers) so the driver hash-checks the streaming path strongly."""
+    from big_data_flight_spark.operators.text import _INCR_ORACLE
+    from big_data_flight_spark.registry import _REGISTRY, _load_all_operator_modules
+
+    _load_all_operator_modules()
+    assert _REGISTRY["stream_incremental_dedup"].oracle == _INCR_ORACLE
+    assert _REGISTRY["text_dedup_incremental"].oracle == _INCR_ORACLE
 
 
 def test_exact_dedup_normalizes(spark):
